@@ -39,7 +39,8 @@ object DemoCorpus {
     // parallelism is worth it only when the consumer evaluates the parse
     // subtree ONCE (viaf_update: 2.4→1.3 s interleaved A/B at equal
     // controls); plans that reference the fragment stream several times
-    // (fast_docs: buildDocs + sameAsLabels + match probe) measured 2×
+    // (fast_docs: the grouped docs, read twice by the doc-level
+    // enrichment probe, plus the label table) measured 2×
     // SLOWER widened — three copies of the exchange serialize stages that
     // previously overlapped as independent one-task subtrees. A real
     // many-split NT source at scale takes the narrow branch and pays no

@@ -1,21 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 import graft.ingest.{FastIngest, Sinks}
 import graft.sources.NtReader
 
 /** End-to-end ingest job — the engine's equivalent of the reference's
-  * master entry point (`lib/ingest.js:26-95`): read NT files, build the
-  * `fast` table, update the `viaf` table, write both.
+  * master entry point (`lib/ingest.js:26-95`): read the 7 FAST NT files,
+  * build the `fast` table, update the `viaf` table, write both.
   *
-  * Usage:
-  *   IngestJob <ntFileOrGlob> <docType> <outDir> [viafParquet]   — one file
-  *   IngestJob all <ntDir> <outDir> [viafParquet]                — the full
-  *     7-file FAST layout in one invocation (see [[runAll]])
-  * (With no args, runs a self-contained demo over an NT corpus generated
-  * from the sf0.001 `part` fixture.)
+  * Usage: IngestJob all <ntDir> <outDir> [viafParquet]   (see [[runAll]])
   */
 object IngestJob {
 
@@ -28,10 +23,13 @@ object IngestJob {
     "FASTFormGenre.nt", "FASTGeographic.nt", "FASTPersonal.nt",
     "FASTTopical.nt")
 
-  private val TermTypes = Seq("Chronological", "Form", "Geographic", "Topical")
   private val AgentTypes = Seq("Corporate", "Event", "Personal")
 
-  final case class RunReport(fastRows: Long, viafRows: Long)
+  /** `badRows`: docs the `fast IS NOT NULL` guard dropped at the sink;
+    * `missingPref`: written docs with no prefLabel.
+    */
+  final case class RunReport(fastRows: Long, viafRows: Long, badRows: Long,
+                             missingPref: Long)
 
   /** One-command multi-file ingest, replacing the reference's 8 worker
     * forks with branches over ONE cached parse:
@@ -42,12 +40,10 @@ object IngestJob {
     *    the filename (P7); the Event file feeds BOTH paths from the same
     *    cached fragments — the virtual `FASTTermEvent` pass
     *    (`lib/ingest.js:197,298-303`) without a second read;
-    *  - term path: term-file fragments + Event fragments → grouped docs
-    *    (cross-file duplicate ids merge, type = max over contributing
-    *    files); the P6 skipViaf filter then drops Event docs that carry a
-    *    sameAsViaf link (those ids were consumed as agents) and keeps
-    *    VIAF-less events as ordinary `Event` docs; enrichment labels come
-    *    from all files' external rdfs:label rows;
+    *  - term path: [[FastIngest.termDocs]] — term-file + Event fragments →
+    *    grouped docs (cross-file duplicate ids merge, type = max over
+    *    contributing files), P6 skipViaf filter, enrichment from all
+    *    files' external rdfs:label rows;
     *  - agent path: Corporate/Event/Personal fragments → otherId
     *    extraction (P4) → disjunctive VIAF lookup-update (J2/K4).
     *
@@ -62,12 +58,7 @@ object IngestJob {
       .project(NtReader.triplesTagged(spark, RequiredFiles.map(f => s"$ntDir/$f"): _*))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // term path (+ the TermEvent second pass off the same fragments)
-      val termFrags = fragments.where(col("doc_type").isin(TermTypes :+ "Event": _*))
-      val termDocs = FastIngest.buildDocsTagged(termFrags)
-        .where(!(col("type") === "Event" && size(col("sameAsViaf")) > 0)) // P6 skipViaf
-      val docs = FastIngest.enrich(termDocs, FastIngest.sameAsLabels(fragments))
-      val fastReport = Sinks.writeFast(docs, s"$outDir/fast")
+      val fastReport = Sinks.writeFast(FastIngest.termDocs(fragments), s"$outDir/fast")
 
       // agent path — viafUpdate is lazy, so the sink write below is the
       // ONLY materialization of the updated table (no pre-write checkpoint)
@@ -76,48 +67,23 @@ object IngestJob {
         val updated = FastIngest.viafUpdate(FastIngest.agentOtherIds(agentFrags), v)
         Sinks.writeViaf(updated, s"$outDir/viaf").rows
       }.getOrElse(0L)
-      RunReport(fastReport.rows, viafRows)
+      RunReport(fastReport.rows, viafRows, fastReport.badRows, fastReport.missingPref)
     } finally {
       fragments.unpersist()
     }
   }
 
   def main(args: Array[String]): Unit = {
+    if (args.length < 3 || args.length > 4 || args(0) != "all") {
+      System.err.println("usage: IngestJob all <ntDir> <outDir> [viafParquet]")
+      sys.exit(2)
+    }
+    val (ntDir, outDir) = (args(1), args(2))
     val spark = GraftSession.local("graft-ingest")
-
-    if (args.headOption.contains("all")) {
-      val (ntDir, outDir) = (args(1), args(2))
-      val viaf = if (args.length >= 4) Some(spark.read.parquet(args(3))) else None
-      val report = runAll(spark, ntDir, outDir, viaf)
-      println(s"FAST_ROWS=${report.fastRows} VIAF_ROWS=${report.viafRows} OUT=$outDir")
-      spark.stop()
-      return
-    }
-
-    val outDir = if (args.length >= 3) args(2) else "/tmp/graft_ingest_out"
-    val (lines, docType) =
-      if (args.length >= 2) (spark.read.text(args(0)).withColumnRenamed("value", "line"), args(1))
-      else {
-        val part = Tables.load(spark, "/root/testdata/sf0.001", "part")
-        (DemoCorpus.ntFromPart(part), "Topical")
-      }
-
-    val fragments = FastIngest.project(FastIngest.parse(lines)).cache()
-    val docs = FastIngest.enrich(
-      FastIngest.buildDocs(fragments, lit(docType)),
-      FastIngest.sameAsLabels(fragments))
-    val fastReport = Sinks.writeFast(docs, s"$outDir/fast")
-
-    if (args.length >= 4) {
-      val viaf = spark.read.parquet(args(3))
-      val updated = FastIngest.viafUpdate(FastIngest.agentOtherIds(fragments), viaf)
-      val viafReport = Sinks.writeViaf(updated, s"$outDir/viaf")
-      println(s"VIAF_ROWS=${viafReport.rows}")
-    }
-    fragments.unpersist()
-    println(s"FAST_ROWS=${fastReport.rows} OUT=$outDir")
-    val back = Sinks.readTable(spark, s"$outDir/fast")
-    println(s"READBACK_ROWS=${back.count()} TYPES=${back.select("type").distinct().count()}")
+    val viaf = args.lift(3).map(spark.read.parquet(_))
+    val report = runAll(spark, ntDir, outDir, viaf)
+    println(s"FAST_ROWS=${report.fastRows} BAD_ROWS=${report.badRows} " +
+      s"MISSING_PREF=${report.missingPref} VIAF_ROWS=${report.viafRows} OUT=$outDir")
     spark.stop()
   }
 }

@@ -31,7 +31,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
   * execute at build time, so their printed plan is the post-checkpoint
   * scan, not the pipeline that ran. Audit those by reading the op's
   * construction (and this tool's plan for the stages downstream of the
-  * checkpoint). ingestDocs/viafUpdate are lazy as of round 8 and audit
+  * checkpoint). FastIngest.termDocs/viafUpdate are lazy and audit
   * normally.
   */
 object PlanAudit {

@@ -168,41 +168,21 @@ object FastIngest {
         sort_array(collect_set($"normalized")).as("extNormalized"))
 
   /** J1 — enrich docs with labels of their sameAs URIs
-    * (`lib/ingest.js:264-295`). Only full-URI elements can match — the
-    * bare-id segments never join (label table is keyed by full subject URI),
-    * which preserves the reference's observable behavior.
+    * (`lib/ingest.js:264-295`): explode the doc arrays, join the label
+    * table, regroup the matched labels per id and union them into the doc.
+    * Only full-URI elements can match — the bare-id segments never join
+    * (label table is keyed by full subject URI), which preserves the
+    * reference's observable behavior.
     * The label side is small relative to the docs side → broadcast.
     */
-  def enrich(docs: DataFrame, labels: DataFrame): DataFrame =
-    applyMatches(docs, matchesFromDocs(docs, labels))
-
-  /** Matched external labels per id, probed from doc arrays. */
-  private def matchesFromDocs(docs: DataFrame, labels: DataFrame): DataFrame =
-    docs
+  def enrich(docs: DataFrame, labels: DataFrame): DataFrame = {
+    val matches = docs
       .select($"_id", explode(concat($"sameAsViaf", $"sameAsLc")).as("uri"))
       .join(broadcast(labels), $"uri" === labels("subject"))
       .groupBy($"_id")
       .agg(
         array_distinct(flatten(collect_list($"extLabels"))).as("matchedLabels"),
         array_distinct(flatten(collect_list($"extNormalized"))).as("matchedNormalized"))
-
-  /** Matched external labels per id, probed from *fragments* — equivalent
-    * to [[matchesFromDocs]] (only full URIs can ever match; the bare
-    * segments added at doc build never do), but avoids consuming the
-    * grouped docs twice: the probe runs pre-aggregation, so `docs` is
-    * evaluated exactly once in [[ingestDocs]].
-    */
-  private def matchesFromFragments(fragments: DataFrame, labels: DataFrame): DataFrame =
-    fragments
-      .where($"kind" === "fast" && ($"sameAsViaf".isNotNull || $"sameAsLc".isNotNull))
-      .select($"id".as("_id"), coalesce($"sameAsViaf", $"sameAsLc").as("uri"))
-      .join(broadcast(labels), $"uri" === labels("subject"))
-      .groupBy($"_id")
-      .agg(
-        array_distinct(flatten(collect_list($"extLabels"))).as("matchedLabels"),
-        array_distinct(flatten(collect_list($"extNormalized"))).as("matchedNormalized"))
-
-  private def applyMatches(docs: DataFrame, matches: DataFrame): DataFrame =
     docs
       .join(matches, Seq("_id"), "left")
       .select(
@@ -212,63 +192,30 @@ object FastIngest {
         $"sameAsLc", $"sameAsViaf",
         sort_array(array_distinct(concat($"normalized", coalesce($"matchedNormalized", array()))))
           .as("normalized"))
-
-  /** A lazily-built op result plus the release handle for its cached
-    * intermediate. The caller runs its ONE materializing action (typically
-    * the sink write — the only full materialization on the path), then
-    * calls [[release]]; any further action on [[result]] after release
-    * recomputes from source. Harness paths that can't thread the handle
-    * (Verify/Bench run `GraftSession.releaseAll` between queries) are
-    * covered by that sweep instead.
-    */
-  final case class Staged(result: DataFrame, release: () => Unit)
-
-  /** Term path end-to-end: lines → enriched docs.
-    * `fragments` feeds three branches (docs, label table, enrichment probe)
-    * and is persisted so the parse/project scan runs once; the enrichment
-    * probe joins at fragment level, so the grouped docs are consumed
-    * exactly once. (MEMORY_AND_DISK: at cluster scale the persist spills,
-    * not OOMs.)
-    *
-    * LAZY: nothing runs until the caller's action — at 100 TB the sink
-    * write is then the ONLY materialization of the result (round 7 eagerly
-    * checkpointed here, doubling output I/O on the ingest path). The
-    * fragments cache populates during that action and is freed via the
-    * returned [[Staged]] handle once the action completes.
-    */
-  def ingestDocsStaged(lines: DataFrame, docType: Column): Staged = {
-    val fragments = project(parse(lines))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Staged(
-      applyMatches(
-        buildDocs(fragments, docType),
-        matchesFromFragments(fragments, sameAsLabels(fragments))),
-      () => { fragments.unpersist(); () })
   }
 
-  /** [[ingestDocsStaged]] without the handle — for harness/interactive
-    * call-sites whose storage is swept externally
-    * ([[graft.GraftSession.releaseAll]]).
+  /** Doc types that feed the term path: the four term files plus Event,
+    * the virtual `FASTTermEvent` second pass (`lib/ingest.js:197,298-303`).
     */
-  def ingestDocs(lines: DataFrame, docType: Column): DataFrame =
-    ingestDocsStaged(lines, docType).result
+  private val TermTypes = Seq("Chronological", "Form", "Geographic", "Topical", "Event")
 
-  /** [[ingestDocs]] with the fragment stream materialized EAGERLY (one
-    * checkpoint) instead of lazily cached: the parse runs exactly once in
-    * its own job and every consumer reads the checkpoint — combined with a
-    * widened one-split source (DemoCorpus.ntFromPart widen) this
-    * parallelizes the parse instead of racing three consumer stages into
-    * one single-task cache fill (VERDICT r16 #3; the r16 widen-only A/B
-    * was 2× slower exactly because the lazy fill kept the parse on the
-    * consumer stages' critical path). Harness call sites only — storage is
-    * swept by [[graft.GraftSession.releaseAll]]; deploys thread
-    * [[ingestDocsStaged]]'s release handle instead.
+  /** Term path: `doc_type`-tagged fragments (see [[typeFromFilename]]) →
+    * enriched docs. Term-type fragments are grouped (A1); the P6 skipViaf
+    * filter then drops Event docs that carry a sameAsViaf link (those ids
+    * are consumed as agents) and keeps VIAF-less events as ordinary
+    * `Event` docs; enrichment labels come from ALL fragments' external
+    * rdfs:label rows, agent files included.
+    *
+    * `fragments` feeds two branches (docs, label table); the caller
+    * decides whether to persist or materialize it — this op stores
+    * nothing and stays LAZY, so the caller's sink write is the only
+    * materialization of the result.
     */
-  def ingestDocsMaterialized(lines: DataFrame, docType: Column): DataFrame = {
-    val fragments = graft.ops.Iterate.materialize(project(parse(lines))).df
-    applyMatches(
-      buildDocs(fragments, docType),
-      matchesFromFragments(fragments, sameAsLabels(fragments)))
+  def termDocs(fragments: DataFrame): DataFrame = {
+    val termFrags = fragments.where($"doc_type".isin(TermTypes: _*))
+    val docs = buildDocsTagged(termFrags)
+      .where(!($"type" === "Event" && size($"sameAsViaf") > 0)) // P6 skipViaf
+    enrich(docs, sameAsLabels(fragments))
   }
 
   /** P4 — agent records: otherId = trailing segment of the sameAs link, LC

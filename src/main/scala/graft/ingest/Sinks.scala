@@ -14,20 +14,28 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  case class WriteReport(rows: Long, badRows: Long, path: String)
+  /** `badRows`: rows the P5 guard dropped; `missingPref`: written rows
+    * with a null prefLabel (always 0 for viaf rows, which have none).
+    */
+  case class WriteReport(rows: Long, badRows: Long, missingPref: Long, path: String)
 
   /** K1+K2: overwrite the `fast` table, partitioned by `type` — at scale
     * the 8 type partitions give partition-pruned reads for the dominant
-    * "lookup by type" access path. Returns observed counters (A3): rows
-    * written and bad rows dropped (P5 guard).
+    * "lookup by type" access path. Returns observed counters (A3), counted
+    * in the write's own pass: rows written, bad rows dropped by the P5
+    * `fast IS NOT NULL` guard, and written rows missing a prefLabel.
     */
   def writeFast(docs: DataFrame, path: String): WriteReport = {
     val obs = Observation("fast_write")
-    val good = docs.where(col("fast").isNotNull)
-      .observe(obs, count(lit(1)).as("rows"),
-        count(when(col("prefLabel").isNull, 1)).as("missing_pref"))
-    good.write.mode("overwrite").partitionBy("type").parquet(path)
-    WriteReport(obs.get("rows").asInstanceOf[Long], 0L, path)
+    val kept = col("fast").isNotNull
+    docs
+      .observe(obs, count(when(kept, 1)).as("rows"),
+        count(when(!kept, 1)).as("bad_rows"),
+        count(when(kept && col("prefLabel").isNull, 1)).as("missing_pref"))
+      .where(kept)
+      .write.mode("overwrite").partitionBy("type").parquet(path)
+    def n(name: String): Long = obs.get(name).asInstanceOf[Long]
+    WriteReport(n("rows"), n("bad_rows"), n("missing_pref"), path)
   }
 
   /** K4: overwrite the updated viaf table. */
@@ -35,7 +43,7 @@ object Sinks {
     val obs = Observation("viaf_write")
     val observed = viaf.observe(obs, count(lit(1)).as("rows"))
     observed.write.mode("overwrite").parquet(path)
-    WriteReport(obs.get("rows").asInstanceOf[Long], 0L, path)
+    WriteReport(obs.get("rows").asInstanceOf[Long], 0L, 0L, path)
   }
 
   def readTable(spark: SparkSession, path: String): DataFrame =

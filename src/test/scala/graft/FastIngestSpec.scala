@@ -20,8 +20,12 @@ class FastIngestSpec extends SparkSpec {
   private def fastLine(id: Int, p: String, o: String) =
     s"<http://id.worldcat.org/fast/$id> <$p> $o ."
 
+  private def fragments(lines: Seq[String]) =
+    FastIngest.project(FastIngest.parse(
+      lines.toDF("line").select($"line", lit("Topical").as("doc_type"))))
+
   private def docs(lines: Seq[String]): Map[Int, Row] =
-    FastIngest.ingestDocs(lines.toDF("line"), lit("Topical"))
+    FastIngest.termDocs(fragments(lines))
       .collect().map(r => r.getAs[Int]("_id") -> r).toMap
 
   test("prefLabel wins over rdfs:label; label fills when prefLabel absent") {
@@ -88,20 +92,18 @@ class FastIngestSpec extends SparkSpec {
     assert(out("c") === Seq(1))
   }
 
-  test("ingestDocs and viafUpdate leave no persisted storage behind") {
+  test("termDocs and viafUpdate leave no persisted storage behind") {
     // clean slate incl. RDD-level blocks (see GraphSpec's twin test)
     GraftSession.releaseAll(spark)
     val sc = spark.sparkContext
     val base = sc.getPersistentRDDs.size
     val baseCache = !spark.sharedState.cacheManager.isEmpty
-    val staged = FastIngest.ingestDocsStaged(
-      Seq(fastLine(1, pref, "\"Doc One\"")).toDF("line"), lit("Topical"))
-    staged.result.collect() // the one materializing action
-    staged.release()        // frees the fragments intermediate
+    // both ops are fully lazy: one action, nothing to release
+    FastIngest.termDocs(fragments(Seq(fastLine(1, pref, "\"Doc One\"")))).collect()
     val upd = FastIngest.viafUpdate(
       Seq((10, "v1")).toDF("id", "otherId"),
       Seq(("a", "v1", "lcA", Seq(99))).toDF("_id", "viaf", "lcId", "fast"))
-    upd.collect() // fully lazy op — nothing to release
+    upd.collect()
     assert(sc.getPersistentRDDs.size === base,
       s"ingest ops leaked persisted RDDs: ${sc.getPersistentRDDs.values.map(_.name)}")
     assert(spark.sharedState.cacheManager.isEmpty || baseCache,

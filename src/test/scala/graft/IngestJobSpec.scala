@@ -2,14 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.functions._
-
 import graft.ingest.{FastIngest, Sinks}
 import graft.sources.NtReader
 
-/** End-to-end job test over real NT files on disk: term path (docs table)
-  * and agent path (viaf update) — the committed form of the manual probe
-  * that validated IngestJob's 4-arg mode.
+/** End-to-end job tests over real NT files on disk: term path (docs table)
+  * and agent path (viaf update), one file at a time and as the full
+  * 7-file [[IngestJob.runAll]], plus its pre-flight validation.
   */
 class IngestJobSpec extends SparkSpec {
 
@@ -24,11 +22,8 @@ class IngestJobSpec extends SparkSpec {
         |<http://viaf.org/viaf/900> <http://www.w3.org/2000/01/rdf-schema#label> "Alpha External Alias" .
         |""".stripMargin)
 
-    val fragments = FastIngest.project(NtReader.triples(spark, s"$dir/FASTTopical.nt"))
-    val docs = FastIngest.enrich(
-      FastIngest.buildDocs(fragments, lit("Event")),
-      FastIngest.sameAsLabels(fragments))
-    val report = Sinks.writeFast(docs, s"$dir/fast")
+    val fragments = FastIngest.project(NtReader.triplesTagged(spark, s"$dir/FASTTopical.nt"))
+    val report = Sinks.writeFast(FastIngest.termDocs(fragments), s"$dir/fast")
     assert(report.rows === 2)
 
     val back = Sinks.readTable(spark, s"$dir/fast").collect()
@@ -57,9 +52,11 @@ class IngestJobSpec extends SparkSpec {
     val sameAs = "http://schema.org/sameAs"
     val rdfs = "http://www.w3.org/2000/01/rdf-schema#label"
 
-    // term files: one doc each
+    // term files: one doc each; doc 1's LC link is labelled only in an
+    // agent file (Corporate, below)
     Files.writeString(Paths.get(s"$dir/FASTTopical.nt"),
-      fastLine(1, pref, "\"Topical One\"") + "\n")
+      fastLine(1, pref, "\"Topical One\"") + "\n" +
+      fastLine(1, sameAs, "<http://id.loc.gov/authorities/subjects/sh100>") + "\n")
     Files.writeString(Paths.get(s"$dir/FASTGeographic.nt"),
       fastLine(2, pref, "\"Geo Two\"") + "\n")
     Files.writeString(Paths.get(s"$dir/FASTChronological.nt"),
@@ -78,7 +75,8 @@ class IngestJobSpec extends SparkSpec {
     // agent-only files
     Files.writeString(Paths.get(s"$dir/FASTCorporate.nt"),
       fastLine(7, pref, "\"Corp Seven\"") + "\n" +
-      fastLine(7, sameAs, "<http://id.loc.gov/authorities/names/lc700>") + "\n")
+      fastLine(7, sameAs, "<http://id.loc.gov/authorities/names/lc700>") + "\n" +
+      s"<http://id.loc.gov/authorities/subjects/sh100> <$rdfs> \"Topical Alias\" .\n")
     Files.writeString(Paths.get(s"$dir/FASTPersonal.nt"),
       fastLine(8, pref, "\"Person Eight\"") + "\n" +
       fastLine(8, sameAs, "<http://viaf.org/viaf/800>") + "\n")
@@ -118,6 +116,8 @@ class IngestJobSpec extends SparkSpec {
     // VIAF-carrying event doc are NOT in fast
     assert(fast.keySet === Set(1, 2, 3, 4, 6))
     assert(report.fastRows === 5)
+    assert(report.badRows === 0)
+    assert(report.missingPref === 0)
     assert(fast(1).getAs[String]("type") === "Topical")
     assert(fast(2).getAs[String]("type") === "Geographic")
     assert(fast(3).getAs[String]("type") === "Chronological")
@@ -125,6 +125,8 @@ class IngestJobSpec extends SparkSpec {
     assert(fast(6).getAs[String]("type") === "Event")
     // enrichment reached the kept event doc through its LC link
     assert(fast(6).getAs[Seq[String]]("altLabel") === Seq("Six Alias"))
+    // ... and a term doc through a label that only an agent file carries
+    assert(fast(1).getAs[Seq[String]]("altLabel") === Seq("Topical Alias"))
 
     val v = Sinks.readTable(spark, s"$dir/out/viaf").collect()
       .map(r => r.getAs[String]("_id") -> r.getAs[Seq[Int]]("fast")).toMap
@@ -132,5 +134,18 @@ class IngestJobSpec extends SparkSpec {
     assert(v("vB") === Seq(7, 42))   // corporate via lcId, array-unioned
     assert(v("vC") === Seq(8))       // personal via viaf key
     assert(v("vD") === Seq(9))       // untouched row unchanged
+  }
+
+  test("runAll: a missing FAST file fails pre-flight and writes nothing") {
+    val dir = Files.createTempDirectory("graft_job_missing").toString
+    IngestJob.RequiredFiles.filterNot(_ == "FASTPersonal.nt").foreach { f =>
+      Files.writeString(Paths.get(s"$dir/$f"),
+        "<http://id.worldcat.org/fast/1> <http://www.w3.org/2004/02/skos/core#prefLabel> \"One\" .\n")
+    }
+    val err = intercept[IllegalArgumentException] {
+      IngestJob.runAll(spark, dir, s"$dir/out", None)
+    }
+    assert(err.getMessage.contains("FASTPersonal.nt"))
+    assert(!Files.exists(Paths.get(s"$dir/out")), "pre-flight failure created output")
   }
 }

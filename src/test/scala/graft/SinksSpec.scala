@@ -19,6 +19,8 @@ class SinksSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
     val report = Sinks.writeFast(docs, s"$out/fast")
     assert(report.rows === 2) // P5 guard dropped the null-fast row
+    assert(report.badRows === 1)
+    assert(report.missingPref === 1) // written row 2 has no prefLabel
     val back = Sinks.readTable(spark, s"$out/fast")
     assert(back.count() === 2)
     assert(back.select("type").distinct().count() === 2) // partition column survives
