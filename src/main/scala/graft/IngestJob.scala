@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -51,7 +52,14 @@ object IngestJob {
     */
   def runAll(spark: SparkSession, ntDir: String, outDir: String,
              viaf: Option[DataFrame]): RunReport = {
-    val missing = RequiredFiles.filterNot(f => new java.io.File(s"$ntDir/$f").isFile)
+    // through the Hadoop FileSystem, so `file:`/`hdfs://` directories pass
+    // exactly when Spark can read them
+    val conf = spark.sparkContext.hadoopConfiguration
+    val missing = RequiredFiles.filterNot { f =>
+      val p = new Path(ntDir, f)
+      val fs = p.getFileSystem(conf)
+      fs.exists(p) && fs.getFileStatus(p).isFile
+    }
     require(missing.isEmpty, s"missing FAST files in $ntDir: ${missing.mkString(", ")}")
 
     val fragments = FastIngest

@@ -180,6 +180,15 @@ object ScaleCurveSmoke {
           graft.ops.Dedup.minhashCandidates(
             graft.ops.Dedup.minhashSignature(docsN, "text", "doc_id"),
             "doc_id", threshold = 0.25), "a_id", "b_id")),
+      // the dedup_ngram query's parameters, widened like dedup_winnow_pairs:
+      // the dfCap clamp must keep candidate work linear in corpus size
+      ("dedup_ngram",
+        () => graft.ops.Dedup.ngramCandidates(
+          docs1.repartition(spark.sparkContext.defaultParallelism),
+          "text", "doc_id", k = 3, dfCap = 100, threshold = 0.5),
+        () => graft.ops.Dedup.ngramCandidates(
+          docsN.repartition(spark.sparkContext.defaultParallelism),
+          "text", "doc_id", k = 3, dfCap = 100, threshold = 0.5)),
       ("ann_ivf",
         () => {
           val e = emb1

@@ -329,8 +329,6 @@ object SparkEntry {
   private def nsSql(x: String): String = singSql(normSql(x))
 
   private val stopEn = Seq("the", "a", "and", "of", "to")
-  /** Scale-smoke access to the pinned stopword set. */
-  private[graft] def stopEnPublic: Seq[String] = stopEn
   private def inList(ws: Seq[String]) = ws.map(w => s"'$w'").mkString("(", ", ", ")")
 
   /** NDCG@10 integer position weights — w(i) = round(10^6 / log2(i+1)) —

@@ -241,39 +241,32 @@ object FastIngest {
     * otherId (min `_id`, the deterministic stand-in for Mongo's
     * `results[0]`), then array-union the fast ids into the matched rows.
     *
+    * Authority tables are dimension-sized, so the unpivoted key table
+    * rides a broadcast and the match happens MAP-SIDE over the raw
+    * fragment stream — only MATCHED fragments reach the one (otherId)
+    * exchange, which both removes the former pre-aggregation exchange and
+    * its sort-aggregate first() pass (r16: 1.8 → 1.5 s at sf0.1) and
+    * shrinks the shuffle payload by the match selectivity at any scale.
+    *
     * `viaf` schema: _id STRING, viaf STRING, lcId STRING, fast ARRAY<INT>.
     * Returns the full updated viaf table (unmatched rows unchanged).
     */
-  /** `broadcastViaf = true` (default): authority tables are
-    * dimension-sized, so the unpivoted key table rides a broadcast and
-    * the match happens MAP-SIDE over the raw fragment stream — only
-    * MATCHED fragments reach the one (otherId) exchange, which both
-    * removes the former pre-aggregation exchange and its sort-aggregate
-    * first() pass (r16: 1.8 → 1.5 s at sf0.1) and shrinks the shuffle
-    * payload by the match selectivity at any scale. Set false for an
-    * authority table too large to broadcast: the planner then
-    * shuffle-joins, and the (otherId) aggregation still bounds the
-    * exchange by distinct matched keys.
-    */
-  def viafUpdate(agents: DataFrame, viaf: DataFrame,
-                 broadcastViaf: Boolean = true): DataFrame = {
-    val viafKeys0 = viaf
+  def viafUpdate(agents: DataFrame, viaf: DataFrame): DataFrame = {
+    val viafKeys = viaf
       .select($"_id".as("v_id"), explode(array($"viaf", $"lcId")).as("vkey"))
       .where($"vkey".isNotNull)
-    val viafKeys = if (broadcastViaf) broadcast(viafKeys0) else viafKeys0
     // match BEFORE aggregating, then ONE (otherId) aggregation computes
     // both the winner (min _id — the deterministic stand-in for Mongo's
     // results[0]) and the id set; duplicate id rows from an otherId
     // matching both keys of one viaf row collapse in collect_set
-    val am = agents.join(viafKeys, $"otherId" === $"vkey")
+    val am = agents.join(broadcast(viafKeys), $"otherId" === $"vkey")
       .groupBy($"otherId")
       .agg(min($"v_id").as("v_id"), collect_set($"id").as("newFast"))
     val perViaf = am
       .groupBy($"v_id")
       .agg(array_distinct(flatten(collect_list($"newFast"))).as("addFast"))
-    val perViafB = if (broadcastViaf) broadcast(perViaf) else perViaf
     viaf
-      .join(perViafB, viaf("_id") === perViaf("v_id"), "left")
+      .join(broadcast(perViaf), viaf("_id") === perViaf("v_id"), "left")
       .select(viaf("_id"), $"viaf", $"lcId",
         when($"addFast".isNotNull,
           sort_array(array_distinct(concat(coalesce($"fast", array()), $"addFast"))))

@@ -181,16 +181,11 @@ object Graph {
     * `max(struct(cnt, -label))` then run partition-local on top of it
     * (HashPartitioning(node) satisfies both groupings). Adjacency rows
     * bound task memory by max-degree — fine for the bounded-degree
-    * co-occurrence graphs this engine builds; for power-law graphs where
-    * receiver-side raw-message volume is the binding constraint, set
-    * `partialCombine = true`: messages then flow through the standard
-    * two-level aggregation (map-side partial combine before the
-    * exchange), one extra exchange per round. Rounds chain lazily, cut
+    * co-occurrence graphs this engine builds. Rounds chain lazily, cut
     * every [[Iterate.LazyRounds]]. Output: (node, label).
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iterations: Int = 10,
-                       partialCombine: Boolean = false,
                        localBound: Long = LocalIterationBound): DataFrame = {
     val pairs = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
@@ -207,7 +202,7 @@ object Graph {
     // output with its own label, not vanish
     val nodes = pairs.select(col("src").as("node"))
       .unionAll(pairs.select(col("dst").as("node"))).distinct()
-    labelPropagationAdj(adj, nodes, iterations, partialCombine, localBound)
+    labelPropagationAdj(adj, nodes, iterations, localBound)
   }
 
   /** [[labelPropagation]] over a caller-built adjacency table `(src,
@@ -226,10 +221,8 @@ object Graph {
     */
   def labelPropagationAdj(adjacency: DataFrame, nodeSet: DataFrame,
                           iterations: Int,
-                          partialCombine: Boolean = false,
                           localBound: Long = LocalIterationBound): DataFrame =
-    labelPropagationAdjImpl(adjacency, Some(nodeSet), iterations, partialCombine,
-      localBound)
+    labelPropagationAdjImpl(adjacency, Some(nodeSet), iterations, localBound)
 
   /** [[labelPropagationAdj]] when the node set IS the adjacency key set
     * (every node has ≥ 1 neighbor): with symmetric adjacency, every round
@@ -238,8 +231,7 @@ object Graph {
     */
   def labelPropagationAdj(adjacency: DataFrame,
                           iterations: Int): DataFrame =
-    labelPropagationAdjImpl(adjacency, None, iterations, partialCombine = false,
-      LocalIterationBound)
+    labelPropagationAdjImpl(adjacency, None, iterations, LocalIterationBound)
 
   /** Collected-entry bound under which BFS / label propagation finish on
     * the driver instead of paying per-round exchange scheduling: the
@@ -268,7 +260,6 @@ object Graph {
   private def labelPropagationAdjImpl(adjacency: DataFrame,
                           nodeSet: Option[DataFrame],
                           iterations: Int,
-                          partialCombine: Boolean,
                           localBound: Long): DataFrame = {
     // BLIND limit-guarded probe, no persist: a cache write of the
     // array-typed adjacency costs more than the whole local endgame
@@ -301,8 +292,7 @@ object Graph {
     }
     val adj = adjacency.persist(StorageLevel.MEMORY_AND_DISK)
     val nodesOpt = nodeSet.map(_.persist(StorageLevel.MEMORY_AND_DISK))
-    val (labels, pending) =
-      distributedLabelRounds(adj, iterations, partialCombine)
+    val (labels, pending) = distributedLabelRounds(adj, iterations)
     // isolated nodes (no non-self-loop neighbors) keep their own label;
     // materialized so the returned frame stays cheap to re-consume after
     // the backing caches are dropped (same contract as before: the caller
@@ -324,18 +314,15 @@ object Graph {
     * every later round's join. Returns the final label frame plus the
     * last pending lineage cut (released by the caller once consumed).
     */
-  private def distributedLabelRounds(adj: DataFrame, iterations: Int,
-      partialCombine: Boolean): (DataFrame, Option[Iterate.Materialized]) = {
+  private def distributedLabelRounds(adj: DataFrame,
+      iterations: Int): (DataFrame, Option[Iterate.Materialized]) = {
     var labels: DataFrame = adj.select(col("src").as("node"), col("src").as("label"))
     var pending: Option[Iterate.Materialized] = None
     var i = 0
     while (i < iterations) {
-      val messages = adj.join(labels.withColumnRenamed("node", "src"), "src")
+      labels = adj.join(labels.withColumnRenamed("node", "src"), "src")
         .select(explode(col("nbrs")).as("node"), col("label"))
-      val delivered =
-        if (partialCombine) messages
-        else messages.repartition(col("node"))
-      labels = delivered
+        .repartition(col("node"))
         .groupBy(col("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy(col("node"))
@@ -556,14 +543,15 @@ object Graph {
   private val BroadcastDegreeLimit = 5_000_000L
 
   /** Edge-count bound above which the wedge build switches from the
-    * self-join to the per-pivot neighbor-list aggregation. TriangleProbe
-    * (r12) on the hash-wired skewed graph: 1.6M edges — self-join 5.5 s
-    * vs list 6.0 s (broadcast-friendly sizes, the join is free); 16M
-    * edges — self-join 27.2 s vs list 18.0 s (the join re-ships the
-    * oriented set; the list build pays one src-keyed exchange and
-    * explodes C(outdeg ≤ O(√m), 2) pairs row-locally). The r11 sf0.1-only
-    * measurement that reverted the list build (55c12f2) sat below the
-    * crossover — this dispatch keeps both regimes on their winner.
+    * self-join to the per-pivot neighbor-list aggregation. Measured (r12,
+    * NOTES.md) on the GraphSmoke hash-wired skewed graph: 1.6M edges —
+    * self-join 5.5 s vs list 6.0 s (broadcast-friendly sizes, the join is
+    * free); 16M edges — self-join 27.2 s vs list 18.0 s (the join
+    * re-ships the oriented set; the list build pays one src-keyed
+    * exchange and explodes C(outdeg ≤ O(√m), 2) pairs row-locally). The
+    * r11 sf0.1-only measurement that reverted the list build (55c12f2)
+    * sat below the crossover — this dispatch keeps both regimes on their
+    * winner.
     */
   private val WedgeListEdgeCutover = 4_000_000L
 
@@ -640,7 +628,7 @@ object Graph {
     (n.toLong, tri)
   }
 
-  /** Both wedge builds, probe-selectable (TriangleProbe) or
+  /** Both wedge builds, test-selectable (GraphSpec checks they agree) or
     * size-dispatched on [[WedgeListEdgeCutover]] when `neighborListWedges`
     * is None. Exactly TWO jobs (r15, VERDICT r14 #3 — the former shape
     * paid a deg.count job + an e.count job + three cache fills before the
@@ -677,7 +665,7 @@ object Graph {
     // bound the distributed wedge path runs unchanged (GraphSmoke's
     // 1.6M-edge fixture stays above it on purpose; ScaleCurveSmoke pins
     // localBound = 0 so the 1×/10× curve compares one algorithm).
-    // Probe-selected wedge variants (TriangleProbe) bypass it too.
+    // A forced wedge build (`neighborListWedges` set) bypasses it too.
     if (neighborListWedges.isEmpty && 2 * nEdges <= localBound) {
       val rows = e.collect()
       em.release()

@@ -538,7 +538,7 @@ object SuffixArray {
     * against the full token arrays, resuming the compare at offset
     * `cap`. With `exact = false` the escalation is skipped and `lcp` is
     * min(true LCP, cap) — all a threshold test `lcp >= L` needs
-    * whenever L ≤ cap (the span-dedup case, [[Dedup.dedupSpansSa]]).
+    * whenever L ≤ cap.
     *
     * Eager: the pair table (narrow: ids, positions, three longs)
     * materializes once and feeds the exact/saturated split — left lazy,
@@ -548,8 +548,7 @@ object SuffixArray {
     */
   def lcpNeighbors(df: DataFrame, textCol: String, idCol: String,
                    sa: DataFrame, cap: Int = 128,
-                   exact: Boolean = true,
-                   emitPrefix: Boolean = false): DataFrame = {
+                   exact: Boolean = true): DataFrame = {
     require(cap >= 1, s"cap must be >= 1, got $cap")
     val ws = df.select(col(idCol).as("_wid"), split(col(textCol), " ").as("_ws"))
     // lazy persist: the slice join feeds both sides of the rank self-join
@@ -563,24 +562,16 @@ object SuffixArray {
     val nbr = sliced.select((col("sa_rank") - 1).as("_prev"),
       col(idCol).as("nbr_id"), col("pos").as("nbr_pos"),
       col("_sfx").as("_nsfx"), col("_rem").as("_nrem"))
-    // emitPrefix: carry the space-joined capped prefix out as
-    // `sfx_prefix` — for a pair with lcp >= cap this IS the shared
-    // cap-token gram, sparing threshold consumers ([[Dedup.dedupSpansSa]])
-    // a third split-and-slice join back to the token arrays
-    val prefixCols =
-      if (emitPrefix) Seq(array_join(col("_sfx"), " ").as("sfx_prefix"))
-      else Seq.empty[Column]
     val base = Iterate.materialize(
       sliced.join(nbr, col("sa_rank") === col("_prev"))
-        .select(Seq(col(idCol), col("pos"), col("nbr_id"), col("nbr_pos"),
+        .select(col(idCol), col("pos"), col("nbr_id"), col("nbr_pos"),
           call_function("common_prefix_len", col("_sfx"), col("_nsfx"))
             .cast("long").as("_lcp0"),
-          col("_rem"), col("_nrem")) ++ prefixCols: _*))
+          col("_rem"), col("_nrem")))
     sliced.unpersist()
     val saturated = col("_lcp0") === cap.toLong &&
       col("_rem") > cap.toLong && col("_nrem") > cap.toLong
-    val outCols = Seq(col(idCol), col("pos"), col("nbr_id"), col("nbr_pos")) ++
-      prefixCols.map(_ => col("sfx_prefix"))
+    val outCols = Seq(col(idCol), col("pos"), col("nbr_id"), col("nbr_pos"))
     if (!exact)
       base.df.select(outCols :+ col("_lcp0").as("lcp"): _*)
     else {

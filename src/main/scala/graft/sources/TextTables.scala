@@ -9,9 +9,7 @@ import org.apache.spark.sql.types.StructType
   * Reading always takes an EXPLICIT schema: schema inference is a full
   * extra pass over the data before the real one — never acceptable at
   * 100 TB — and silently widens types on dirty rows. `FAILFAST` makes
-  * corrupt lines surface as errors instead of silent nulls; callers that
-  * want quarantine semantics pass `permissive = true` and get Spark's
-  * `_corrupt_record` column instead.
+  * corrupt lines surface as errors instead of silent nulls.
   *
   * Both formats split by line, so reads parallelize per HDFS block like
   * any text source; no single-file bottleneck.
@@ -30,11 +28,8 @@ object TextTables {
   def writeJsonl(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").json(path)
 
-  def readJsonl(spark: SparkSession, schema: StructType, path: String,
-      permissive: Boolean = false): DataFrame =
-    spark.read.schema(schema)
-      .option("mode", if (permissive) "PERMISSIVE" else "FAILFAST")
-      .json(path)
+  def readJsonl(spark: SparkSession, schema: StructType, path: String): DataFrame =
+    spark.read.schema(schema).option("mode", "FAILFAST").json(path)
 
   /** CSV with explicit quoting config on BOTH sides so the round trip is
     * self-consistent; see [[CsvNull]] for the null/empty distinction.

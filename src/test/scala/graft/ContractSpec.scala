@@ -119,4 +119,26 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     }
     assert(bad.isEmpty, s"queries with pandas-unsortable output columns: $bad")
   }
+
+  // A main the README does not name is a one-off nobody will find again:
+  // every runnable object must be listed there (or deleted).
+  test("every main under src/main/scala/graft is named in README.md") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
+    val mains = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = Files.readString(p)
+        val objects = """\bobject\s+(\w+)""".r.findAllMatchIn(src).toSeq
+        """\bdef\s+main\s*\(""".r.findAllMatchIn(src).flatMap(m =>
+          objects.takeWhile(_.start < m.start).lastOption.map(_.group(1)))
+      }.toSet
+    assert(mains.contains("IngestJob"), s"main scan found only: $mains")
+    val readme = Files.readString(Paths.get("README.md"))
+    val undocumented = mains.filterNot(m => s"\\b$m\\b".r.findFirstIn(readme).isDefined)
+    assert(undocumented.isEmpty,
+      s"mains missing from README.md: ${undocumented.toSeq.sorted.mkString(", ")}")
+  }
 }

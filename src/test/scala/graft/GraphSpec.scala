@@ -356,6 +356,13 @@ class GraphSpec extends SparkSpec {
       val dist = Graph.triangleCountImpl(edges, "s", "d",
         neighborListWedges = None, localBound = 0L).collect().head
       assert(loc.toSeq === dist.toSeq, s"trial=$trial")
+      // both forced wedge builds (self-join, per-pivot neighbor list)
+      // agree with the default dispatch on the same edges
+      for (nl <- Seq(true, false)) {
+        val forced = Graph.triangleCountImpl(edges, "s", "d",
+          neighborListWedges = Some(nl)).collect().head
+        assert(forced.toSeq === loc.toSeq, s"trial=$trial neighborListWedges=$nl")
+      }
     }
   }
 

@@ -147,5 +147,13 @@ class IngestJobSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("FASTPersonal.nt"))
     assert(!Files.exists(Paths.get(s"$dir/out")), "pre-flight failure created output")
+
+    // complete layout addressed by URI: pre-flight checks through the
+    // Hadoop FileSystem, so a `file:` directory passes like a plain path
+    Files.writeString(Paths.get(s"$dir/FASTPersonal.nt"),
+      "<http://id.worldcat.org/fast/2> <http://www.w3.org/2004/02/skos/core#prefLabel> \"Two\" .\n")
+    val report = IngestJob.runAll(spark, s"file://$dir", s"$dir/out", None)
+    assert(report.fastRows === 1) // fast/1 from the term files; Personal is agent-only
+    assert(Files.exists(Paths.get(s"$dir/out/fast")))
   }
 }

@@ -31,6 +31,17 @@ class TextTablesSpec extends SparkSpec {
     assert(back === rows)
   }
 
+  test("jsonl read fails fast on a malformed line") {
+    val path = Files.createTempDirectory("graft_jsonl_bad")
+    Files.writeString(path.resolve("part-0.json"),
+      """{"id": 1, "text": "ok", "lang": "en"}""" + "\n" + """{"id": 2, "text": """ + "\n")
+    val err = intercept[Exception] {
+      TextTables.readJsonl(spark, df.schema, path.toString).collect()
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("FAILFAST")), err)
+  }
+
   test("csv round-trips with null/empty distinction (no embedded newlines)") {
     val flat = rows.filterNot(_._2.exists(_.contains("\n")))
     val path = Files.createTempDirectory("graft_csv_spec").toString
