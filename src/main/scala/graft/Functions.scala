@@ -23,6 +23,7 @@ object Functions {
     native("word_shingles", exprs => graft.functions.WordShingles(
       exprs(0), exprs(1).eval().asInstanceOf[Int]))
     native("parse_nt", exprs => graft.functions.ParseNt(exprs(0)))
+    native("project_nt", exprs => graft.functions.ProjectNt(exprs(0), exprs(1), exprs(2)))
     native("normalize_label", exprs => graft.functions.NormalizeLabelExpr(exprs(0)))
     native("normalize_singular", exprs => graft.functions.NormalizeSingularExpr(exprs(0)))
     native("rolling_hash", exprs => graft.functions.RollingHash(exprs(0)))

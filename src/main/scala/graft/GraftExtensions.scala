@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{BloomMightContain, BpeApply, Md5Long, NormalizeLabelExpr, NormalizeSingularExpr, NtUnescape, ParseNt, RollingHash, VecDot, VecDotD, VecSignBits, WinnowFps, WordGramHashes, WordSetHits, WordShingles}
+import graft.functions.{BloomMightContain, BpeApply, Md5Long, NormalizeLabelExpr, NormalizeSingularExpr, NtUnescape, ParseNt, ProjectNt, RollingHash, VecDot, VecDotD, VecSignBits, WinnowFps, WordGramHashes, WordSetHits, WordShingles}
 
 /** Injectable extensions: makes the engine's native expressions available
   * in ANY session via `spark.sql.extensions=graft.GraftExtensions` (e.g.
@@ -33,6 +33,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("parse_nt"),
       info("parse_nt", "parse_nt(line) - N-Triples line to STRUCT<subject,predicate,obj>"),
       (exprs: Seq[Expression]) => ParseNt(exprs(0))))
+    ext.injectFunction((
+      FunctionIdentifier("project_nt"),
+      info("project_nt", "project_nt(subject, predicate, obj) - FAST predicate projection of a triple: 0 or 1 rows"),
+      (exprs: Seq[Expression]) => ProjectNt(exprs(0), exprs(1), exprs(2))))
     ext.injectFunction((
       FunctionIdentifier("normalize_label"),
       info("normalize_label", "normalize_label(s) - lowercase, fold accents, strip punctuation"),

@@ -3,45 +3,13 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** N-Triples line parsing as pure column expressions (whole-stage-codegen
-  * friendly — no UDFs on the scan path).
-  *
-  * Reference behavior: `lib/ingest.js:194-198` streams NT through an RDF
-  * parser; `lib/fast_parse.js:63-76` wraps a single-line parse (malformed
-  * input → dropped, pinned by `test/fast_parse.test.js:8-13`).
-  *
-  * Grammar handled (sufficient for FAST dumps): subject and predicate are
-  * IRIs; object is an IRI or a quoted literal with optional `@lang` /
-  * `^^<datatype>` suffix; line ends with ` .`.
+/** N-Triples helpers as pure column expressions (whole-stage-codegen
+  * friendly — no UDFs). Line parsing and the predicate projection are the
+  * native kernels [[graft.functions.ParseNt]] and
+  * [[graft.functions.ProjectNt]].
   */
 object Nt {
 
-  /** `<s> <p> (object term) .` — object term captured raw. */
-  private val LineRe = "^\\s*<([^>]*)>\\s+<([^>]*)>\\s+(.+?)\\s*\\.\\s*$"
-
-  def subject(line: Column): Column = nullIfEmpty(regexp_extract(line, LineRe, 1))
-  def predicate(line: Column): Column = nullIfEmpty(regexp_extract(line, LineRe, 2))
-  def objectTerm(line: Column): Column = nullIfEmpty(regexp_extract(line, LineRe, 3))
-
-  /** IRI objects: `<http://…>` → `http://…`; literals → null. */
-  def objectUri(term: Column): Column =
-    when(term.startsWith("<"), nullIfEmpty(regexp_extract(term, "^<([^>]*)>", 1)))
-
-  /** Literal objects: `"v"`, `"v"@en`, `"v"^^<t>` → `v` with N-Triples
-    * escapes decoded (`\" \\ \n \t \uXXXX …` — [[graft.functions.NtUnescape]]);
-    * IRIs → null. Mirrors `N3Util.getLiteralValue` (`lib/fast_parse.js:31,46`),
-    * which returns decoded values. The greedy `(.*)` capture anchors on the
-    * LAST quote before the optional suffix, so escaped interior quotes
-    * survive the extraction and are decoded afterwards.
-    * Requires `graft.Functions.register` on the session (GraftSession does).
-    */
-  def literalValue(term: Column): Column =
-    when(term.startsWith("\""),
-      call_function("nt_unescape",
-        regexp_extract(term, "^\"(.*)\"(?:@[A-Za-z0-9-]+|\\^\\^<[^>]*>)?$", 1)))
-
   /** Last `/`-segment of a URI (`lib/ingest.js:220,224,250,254`). */
   def lastSegment(c: Column): Column = element_at(split(c, "/"), -1)
-
-  private def nullIfEmpty(c: Column): Column = when(length(c) > 0, c)
 }

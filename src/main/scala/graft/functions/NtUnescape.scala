@@ -61,7 +61,12 @@ object NtUnescape {
   /** Called from generated code. */
   def unescape(s: UTF8String): UTF8String = {
     val str = s.toString
-    if (str.indexOf('\\') < 0) return s // fast path: nothing to decode
+    val out = unescape(str)
+    if (out eq str) s else UTF8String.fromString(out)
+  }
+
+  def unescape(str: String): String = {
+    if (str.indexOf('\\') < 0) return str // fast path: nothing to decode
     val sb = new java.lang.StringBuilder(str.length)
     var i = 0
     val n = str.length
@@ -79,7 +84,7 @@ object NtUnescape {
           case '\\' => sb.append('\\'); i += 2
           case 'u' if i + 6 <= n && parseHex(str, i + 2, 4) >= 0 =>
             sb.append(parseHex(str, i + 2, 4).toChar); i += 6
-          case 'U' if i + 10 <= n && parseHex(str, i + 2, 8) >= 0 =>
+          case 'U' if i + 10 <= n && Character.isValidCodePoint(parseHex(str, i + 2, 8)) =>
             sb.appendCodePoint(parseHex(str, i + 2, 8)); i += 10
           case _ => sb.append(c); i += 1 // not an escape: keep the backslash
         }
@@ -88,6 +93,6 @@ object NtUnescape {
         i += 1
       }
     }
-    UTF8String.fromString(sb.toString)
+    sb.toString
   }
 }

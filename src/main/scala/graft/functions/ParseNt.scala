@@ -70,7 +70,7 @@ object ParseNt {
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
   // Java regex default `.` exclusions (UNIX_LINES off, no DOTALL)
-  private def lineTerm(c: Char): Boolean =
+  private[functions] def lineTerm(c: Char): Boolean =
     c == '\n' || c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029'
 
   /** Called from generated code. Returns null for malformed lines.

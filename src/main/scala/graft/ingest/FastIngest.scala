@@ -2,7 +2,6 @@ package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
 
 import graft.Functions
 import graft.functions.Nt
@@ -32,11 +31,6 @@ import graft.functions.Nt
   */
 object FastIngest {
 
-  private val PrefLabel = "http://www.w3.org/2004/02/skos/core#prefLabel"
-  private val AltLabel = "http://www.w3.org/2004/02/skos/core#altLabel"
-  private val RdfsLabel = "http://www.w3.org/2000/01/rdf-schema#label"
-  private val SameAs = "http://schema.org/sameAs"
-
   /** P1 — NT text lines (column `line`, plus passthrough columns) to triples.
     * Malformed lines are dropped (`test/fast_parse.test.js:8-13`).
     * Uses the one-pass [[graft.functions.ParseNt]] expression (single regex
@@ -64,43 +58,25 @@ object FastIngest {
     * Output: one row per *kept* triple with a `kind` discriminator:
     * `fast` rows carry (id, prefLabel|altLabel|label|sameAsLc|sameAsViaf,
     * normalized); `sameAsLabel` rows carry (subject, label, normalized).
+    * An id that does not fit in INT is NULL, like a non-numeric one, and
+    * is dropped by the P5 guard.
+    *
+    * One native kernel, [[graft.functions.ProjectNt]], evaluated once per
+    * triple. The column-expression tree it replaces (`when`/`otherwise`
+    * over `regexp_extract`, `nt_unescape` and a cast) compiled to a
+    * whole-stage-codegen method past HotSpot's 8,000-byte JIT limit, so
+    * every triple ran in the interpreter, and its `kind IS NOT NULL`
+    * filter, pushed below the projection, evaluated it twice.
     */
   def project(triples: DataFrame): DataFrame = {
-    val isFast = $"subject".contains("/fast/")
-    val isNaN = $"subject".contains("/fast/NaN") || $"obj".contains("/fast/NaN")
-    // parseInt-of-trailing-segment semantics (`lib/fast_parse.js:23`), made
-    // ANSI-safe: no digits after /fast/ → NULL (dropped later by P5).
-    val idStr = regexp_extract($"subject", "/fast/([0-9]+)", 1)
-    val id = when(idStr =!= "", idStr).cast(IntegerType)
-    val uri = Nt.objectUri($"obj")
-    val lit_ = Nt.literalValue($"obj")
-    val keptLiteral = when(length(lit_) >= 2, lit_) // length guard, fast_parse.js:33
-
-    val prefLabel = when($"predicate" === PrefLabel, keptLiteral)
-    val altLabel = when($"predicate" === AltLabel, keptLiteral)
-    val label = when($"predicate" === RdfsLabel, keptLiteral)
-    val sameAsLc = when($"predicate" === SameAs && uri.contains("id.loc.gov"), uri)
-    val sameAsViaf = when($"predicate" === SameAs && uri.contains("viaf.org"), uri)
-
-    val kind = when(isFast && !isNaN, lit("fast"))
-      .when(!isFast && $"predicate" === RdfsLabel && lit_.isNotNull, lit("sameAsLabel"))
-
     val passthrough = triples.columns
       .filterNot(Set("subject", "predicate", "obj")).map(col)
-
     triples
-      .select(Seq(
-        kind.as("kind"),
-        when(isFast, id).as("id"),
-        prefLabel.as("prefLabel"),
-        altLabel.as("altLabel"),
-        label.as("label"),
-        sameAsLc.as("sameAsLc"),
-        sameAsViaf.as("sameAsViaf"),
-        when(isFast, Functions.normalizeSingular(coalesce(prefLabel, altLabel, label)))
-          .otherwise(Functions.normalizeSingular(lit_)).as("normalized"),
+      .select(call_function("project_nt", $"subject", $"predicate", $"obj") +: $"subject" +:
+        passthrough: _*)
+      .select(Seq($"kind", $"id", $"prefLabel", $"altLabel", $"label", $"sameAsLc",
+        $"sameAsViaf", Functions.normalizeSingular($"normSource").as("normalized"),
         $"subject") ++ passthrough: _*)
-      .where($"kind".isNotNull)
   }
 
   /** P7 — doc type from the source filename (`lib/ingest.js:201-210`):

@@ -18,9 +18,14 @@ import graft.ingest.FastIngest
   * partitions (semi-join on the bucket key — dynamic partition pruning
   * keeps the scan partition-bounded) and writes them back under
   * `partitionOverwriteMode=dynamic`, leaving every untouched partition's
-  * files byte-identical. Per-batch work is O(batch + touched partitions),
-  * not O(table) — the property that matters when the table is 100 TB and
-  * a micro-batch is a few thousand docs.
+  * files byte-identical. Rows read, shuffled and written per batch are
+  * O(batch + touched partitions), not O(table). Two per-batch costs are
+  * not: `spark.read.parquet(tablePath)` lists every bucket directory, and
+  * with 64 buckets, above `spark.sql.sources.parallelPartitionDiscovery.threshold`
+  * (32), each [[mergeBatch]] launches a 64-task listing job (136-147 ms
+  * of a 0.7-1.0 s batch of 100 docs into a 4,000-doc table, 4 cores);
+  * and the batch's docs are evaluated twice, once for the touched-bucket
+  * broadcast and once for the union.
   *
   * The per-id aggregation runs inside the batch; cross-batch duplicates
   * are resolved by the same deterministic merge the batch job uses, so
@@ -29,8 +34,9 @@ import graft.ingest.FastIngest
 object StreamingIngest {
 
   /** Bucket count for the stored table layout. At deploy scale pick
-    * ~table_size / target_partition_size; the merge cost scales with
-    * touched buckets, so more buckets = finer-grained rewrites.
+    * ~table_size / target_partition_size; the rewrite cost scales with
+    * touched buckets, so more buckets = finer-grained rewrites, while the
+    * per-batch directory listing scales with all of them.
     */
   val DefaultBuckets = 64
 
@@ -67,6 +73,8 @@ object StreamingIngest {
         // only the stored partitions this batch's ids hash into
         // participate in the merge — the semi-join on the partition
         // column lets dynamic partition pruning skip the rest of the scan
+        // (the files are pruned; the listing above still covers every
+        // bucket). `incoming` is evaluated here and again in the union.
         val touched = incoming.select("_bucket").distinct()
         prev.join(broadcast(touched), Seq("_bucket"), "left_semi")
           .unionByName(incoming)

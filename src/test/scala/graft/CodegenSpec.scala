@@ -47,6 +47,41 @@ class CodegenSpec extends SparkSpec {
     assert(out.length === 2)
     assert(out.map(_.getAs[Long]("bits")).toSet.size === 2)
     assert(out.map(_.getAs[Int]("wh")).toSet === Set(0, 1)) // `words` hits; `"more` has the quote
+    // a generator: one per select, 0 or 1 rows per triple
+    val kept = s.createDataset(Seq(
+        ("http://id.worldcat.org/fast/1", "http://www.w3.org/2004/02/skos/core#prefLabel",
+          "\"Jazz\"@en"),
+        ("http://x/s", "http://www.w3.org/2000/01/rdf-schema#label", "\"Ext\""),
+        ("http://s", "http://p", "<http://o>")))
+      .toDF("s", "p", "o")
+      .repartition(2)
+      .select(expr("project_nt(s, p, o)"))
+      .collect()
+    assert(kept.map(_.getString(0)).sorted.toSeq === Seq("fast", "sameAsLabel"))
+  }
+
+  test("FastIngest.project compiles to methods small enough for HotSpot to JIT") {
+    // HotSpot leaves a method over 8,000 bytes of bytecode to the
+    // interpreter (DontCompileHugeMethods): a projection stage past that
+    // runs every triple interpreted
+    val dir = java.nio.file.Files.createTempDirectory("codegen-size")
+    val file = dir.resolve("FASTTopical.nt")
+    java.nio.file.Files.write(file, java.util.Arrays.asList(
+      "<http://id.worldcat.org/fast/1> <http://www.w3.org/2004/02/skos/core#prefLabel> \"Jazz\"@en .",
+      "<http://id.worldcat.org/fast/1> <http://schema.org/sameAs> <http://viaf.org/viaf/1> .",
+      "<http://id.loc.gov/x> <http://www.w3.org/2000/01/rdf-schema#label> \"Ext\" ."))
+    val df = graft.ingest.FastIngest.project(
+      graft.sources.NtReader.triplesTagged(spark, file.toString))
+    val stages = df.queryExecution.executedPlan.collect {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+    }
+    assert(stages.nonEmpty)
+    stages.foreach { w =>
+      val size = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        .compile(w.doCodeGen()._2)._2.maxMethodCodeSize
+      assert(size <= 8000, s"largest generated method is $size bytes in\n${w.treeString}")
+    }
+    assert(df.count() === 3)
   }
 
   test("vec_dot_d is exact past the float mantissa (the centroid case)") {

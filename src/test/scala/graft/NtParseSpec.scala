@@ -76,6 +76,20 @@ class NtParseSpec extends SparkSpec {
     assert(projectOne("<http://id.worldcat.org/fast/NaN> <http://www.w3.org/2004/02/skos/core#prefLabel> \"Bad\" .").isEmpty)
   }
 
+  // Spark 4 runs with ANSI mode on: a cast of an out-of-range id used to
+  // fail the whole ingest with CAST_INVALID_INPUT
+  test("an id that does not fit in INT is NULL and the P5 guard drops it") {
+    val rows = projectOne("<http://id.worldcat.org/fast/99999999999> <http://www.w3.org/2004/02/skos/core#prefLabel> \"Too big\" .")
+    assert(rows.map(r => (r.getAs[String]("kind"), r.isNullAt(r.fieldIndex("id")))) ===
+      Seq(("fast", true)))
+    val frags = FastIngest.project(FastIngest.parse(Seq(
+      "<http://id.worldcat.org/fast/99999999999> <http://www.w3.org/2004/02/skos/core#prefLabel> \"Too big\" .",
+      "<http://id.worldcat.org/fast/2147483647> <http://www.w3.org/2004/02/skos/core#prefLabel> \"Max\" .")
+      .toDF("line")))
+    val docs = FastIngest.buildDocs(frags, org.apache.spark.sql.functions.lit("Topical"))
+    assert(docs.collect().map(_.getAs[Int]("fast")).toSeq === Seq(Int.MaxValue))
+  }
+
   test("literal length guard: single-char labels dropped, id fragment kept") {
     val rows = projectOne("<http://id.worldcat.org/fast/5> <http://www.w3.org/2004/02/skos/core#prefLabel> \"X\" .")
     assert(rows.size === 1) // row kept as bare id fragment (kind=fast)...
@@ -115,7 +129,8 @@ class NtParseSpec extends SparkSpec {
   test("nt_unescape leaves malformed escapes intact and is a no-op without backslashes") {
     import org.apache.spark.sql.functions.{col, expr}
     Functions.register(spark)
-    val cases = Seq("plain text", "trunc \\u12", "lone \\ backslash", "\\q")
+    // \U7FFFFFFF is eight hex digits but no code point
+    val cases = Seq("plain text", "trunc \\u12", "lone \\ backslash", "\\q", "\\U7FFFFFFF")
     val out = cases.toDF("s")
       .select(expr("nt_unescape(s)").as("u")).collect().map(_.getString(0)).toSeq
     assert(out === cases)

@@ -81,6 +81,18 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("FastIngest.project evaluates its kernel once per triple") {
+    import spark.implicits._
+    val lines = Seq(
+      "<http://id.worldcat.org/fast/1> <http://www.w3.org/2004/02/skos/core#prefLabel> \"Jazz\" .",
+      "<http://id.loc.gov/x> <http://www.w3.org/2000/01/rdf-schema#label> \"Ext\" .")
+      .toDF("line").repartition(2)
+    val p = graft.ingest.FastIngest.project(graft.ingest.FastIngest.parse(lines))
+      .queryExecution.executedPlan.toString
+    // one Generate: no pushed-down keep filter re-evaluating the projection
+    assert(countOf(p, "project_nt(") === 1, p)
+  }
+
   test("topKPerGroupExecRanked emits rank without a Window node") {
     import org.apache.spark.sql.functions._
     val df = spark.read.parquet(s"$dir/orders.parquet")
