@@ -11,7 +11,7 @@ import graft.model.FastDoc
   *  - `type` comes from the *richest original* document. The reference's
   *    proxy is JSON-serialization length (insert-order dependent); ours is
   *    an explicit total order over original inputs: max by
-  *    (richness, type, prefLabel), richness = total character count of
+  *    (richness, type, prefLabel), richness = total code point count of
   *    prefLabel + type + all array elements (SURVEY.md §7.4 item 1).
   *  - `prefLabel`: the richest doc's, else the minimum non-null one.
   *  - arrays: sorted distinct unions (`lib/ingest.js:144-155`).
@@ -31,11 +31,15 @@ case class MergeBuf(
 
 object MergeFastDocs extends Aggregator[FastDoc, MergeBuf, FastDoc] {
 
-  /** Deterministic stand-in for `JSON.stringify(doc).length` richness. */
-  def richness(d: FastDoc): Int =
-    Option(d.prefLabel).map(_.length).getOrElse(0) +
-      Option(d.`type`).map(_.length).getOrElse(0) +
-      (d.altLabel ++ d.sameAsLc ++ d.sameAsViaf ++ d.normalized).map(_.length).sum
+  /** Deterministic stand-in for `JSON.stringify(doc).length` richness.
+    * Counts code points, not UTF-16 units, as the streaming merge (Spark's
+    * `length`) and the DuckDB oracle do.
+    */
+  def richness(d: FastDoc): Int = {
+    def len(s: String): Int = if (s == null) 0 else s.codePointCount(0, s.length)
+    len(d.prefLabel) + len(d.`type`) +
+      (d.altLabel ++ d.sameAsLc ++ d.sameAsViaf ++ d.normalized).map(len).sum
+  }
 
   private val keyOrd = Ordering.Tuple3[Int, String, String]
 

@@ -19,11 +19,17 @@ import graft.ingest.FastIngest
   * keeps the scan partition-bounded) and writes them back under
   * `partitionOverwriteMode=dynamic`, leaving every untouched partition's
   * files byte-identical. Rows read, shuffled and written per batch are
-  * O(batch + touched partitions), not O(table). Two per-batch costs are
-  * not: `spark.read.parquet(tablePath)` lists every bucket directory, and
-  * with 64 buckets, above `spark.sql.sources.parallelPartitionDiscovery.threshold`
-  * (32), each [[mergeBatch]] launches a 64-task listing job (136-147 ms
-  * of a 0.7-1.0 s batch of 100 docs into a 4,000-doc table, 4 cores);
+  * O(batch + touched partitions), not O(table).
+  *
+  * The merge is bucket-aligned: its one shuffle is keyed on `_bucket`
+  * with an explicit partition count, so AQE does not coalesce it into a
+  * single task, and each task merges, materializes and writes whole
+  * buckets, one file per bucket, on all cores at once. Two per-batch
+  * costs remain: `spark.read.parquet(tablePath)` lists every bucket
+  * directory, and with 64 buckets, above
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32), each
+  * [[mergeBatch]] launches a 64-task listing job (384-436 ms of a
+  * 1.8-3.0 s batch of 100 docs merged into an 8,000-doc table, 4 cores);
   * and the batch's docs are evaluated twice, once for the touched-bucket
   * broadcast and once for the union.
   *
@@ -50,9 +56,8 @@ object StreamingIngest {
     * the stored *merged* doc would inflate early winners via their unioned
     * arrays and make the outcome arrival-order dependent.
     */
-  def mergeBatch(spark: SparkSession, docs: DataFrame, tablePath: String,
-                 numBuckets: Int = DefaultBuckets): Unit = {
-    val bucket = pmod(xxhash64(col("_id")), lit(numBuckets.toLong)).cast("int")
+  def mergeBatch(spark: SparkSession, docs: DataFrame, tablePath: String): Unit = {
+    val bucket = pmod(xxhash64(col("_id")), lit(DefaultBuckets.toLong)).cast("int")
     val incoming = docs.select(col("*"),
         richnessLen.as("_bestRich"), col("type").as("_bestType"),
         col("prefLabel").as("_bestPref"), col("prefLabel").as("_fillPref"))
@@ -84,8 +89,17 @@ object StreamingIngest {
     // of the best original, nulls low
     val ord = struct(col("_bestRich"),
       coalesce(col("_bestType"), lit("")), coalesce(col("_bestPref"), lit("")))
+    // the merge's only shuffle, keyed on the bucket: `_bucket` is a pure
+    // function of `_id`, so grouping on both groups exactly as on `_id`,
+    // and hash partitioning on `_bucket` already satisfies the aggregate,
+    // so no second exchange is planned. The explicit count keeps AQE from
+    // coalescing the exchange into one task; every task then merges and
+    // writes whole buckets. The shuffle carries the union's rows, not
+    // partial aggregation buffers.
+    val tasks = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, DefaultBuckets)
     val merged = unioned
-      .groupBy("_id")
+      .repartition(tasks, col("_bucket"))
+      .groupBy("_bucket", "_id")
       .agg(
         max_by(struct(col("fast"), col("_bestRich"), col("_bestType"),
           col("_bestPref")), ord).as("_best"),
@@ -101,10 +115,11 @@ object StreamingIngest {
         col("_best._bestRich").as("_bestRich"),
         col("_best._bestType").as("_bestType"),
         col("_best._bestPref").as("_bestPref"),
-        col("_fillPref"))
-      .withColumn("_bucket", bucket)
+        col("_fillPref"), col("_bucket"))
     // overwrite must not read from its own output mid-write → materialize
     // fully first (reliable checkpoint when a dir is set, else cache).
+    // The materialized frame keeps the shuffle's partitions, so each write
+    // task holds whole buckets and writes one file per bucket.
     // Dynamic overwrite replaces ONLY the partitions present in the
     // written data (= the touched buckets); untouched partitions' files
     // are left as-is, byte for byte.
@@ -117,7 +132,7 @@ object StreamingIngest {
   }
 
   /** Scalar richness of an ORIGINAL doc, mirroring
-    * [[graft.ingest.MergeFastDocs.richness]]: total character count of
+    * [[graft.ingest.MergeFastDocs.richness]]: total code point count of
     * prefLabel + type + all array elements.
     */
   private def richnessLen =

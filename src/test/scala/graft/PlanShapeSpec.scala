@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Physical-plan shape assertions for the scale-critical rewrites: these
   * queries were rebuilt specifically to remove exchanges (the 100 TB
   * bottleneck), and a silent regression back to the shuffled shape would
@@ -91,6 +93,82 @@ class PlanShapeSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     // one Generate: no pushed-down keep filter re-evaluating the projection
     assert(countOf(p, "project_nt(") === 1, p)
+  }
+
+  test("mergeBatch: one shuffle on the bucket, none after the aggregate, pruned stored scan") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, DynamicPruningExpression, Literal}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.ingest.FastIngest
+    import graft.streaming.StreamingIngest
+
+    // batches built as the pipeline builds them: NT lines -> parse ->
+    // project -> buildDocs
+    def docs(ids: Range) = FastIngest.buildDocs(FastIngest.project(FastIngest.parse(
+      ids.map(i => s"<http://id.worldcat.org/fast/$i> " +
+        s"<http://www.w3.org/2004/02/skos/core#prefLabel> \"Doc $i\" .").toDF("line"))),
+      lit("Topical"))
+    val table = java.nio.file.Files.createTempDirectory("graft_merge_plan").toString + "/fast"
+    StreamingIngest.mergeBatch(spark, docs(1 to 400), table)
+
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(funcName -> qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      StreamingIngest.mergeBatch(spark, docs(350 to 450), table)
+      // listener events arrive on an asynchronous bus
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def materialized = seen.asScala.collectFirst {
+        case (f, qe) if f == "localCheckpoint" || f == "checkpoint" => qe.executedPlan
+      }
+      while (materialized.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      val plan = materialized.getOrElse(fail(s"no materialize seen: ${seen.asScala.map(_._1)}"))
+      object walk extends AdaptiveSparkPlanHelper
+      val text = plan.toString
+
+      // the nodes from the materialized root down to the first `stop`
+      def down(p: SparkPlan, stop: SparkPlan => Boolean): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => down(a.executedPlan, stop)
+        case q: QueryStageExec => q +: down(q.plan, stop)
+        case _ if stop(p) => Nil
+        case _ => p +: p.children.flatMap(down(_, stop))
+      }
+      // the merge's own operators end at the union of stored and incoming
+      // rows; the batch docs' plan below it has shuffles of its own
+      val shuffles = down(plan, _.isInstanceOf[UnionExec])
+        .collect { case e: ShuffleExchangeExec => e }
+      val n = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        StreamingIngest.DefaultBuckets)
+      assert(shuffles.size === 1, s"expected one shuffle:\n$text")
+      shuffles.head.outputPartitioning match {
+        case HashPartitioning(Seq(key: Attribute), parts) =>
+          assert(key.name === "_bucket" && parts === n, s"shuffle not on the bucket:\n$text")
+        case other => fail(s"shuffle partitioned as $other:\n$text")
+      }
+      assert(!down(plan, _.isInstanceOf[BaseAggregateExec]).exists(_.isInstanceOf[Exchange]),
+        s"exchange between the aggregate and the materialize:\n$text")
+
+      val stored = walk.collect(plan) {
+        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains(table)) => s
+      }
+      assert(stored.nonEmpty, s"no scan of the stored table:\n$text")
+      assert(stored.forall(_.partitionFilters.exists {
+        case DynamicPruningExpression(Literal.TrueLiteral) => false
+        case _: DynamicPruningExpression => true
+        case _ => false
+      }), s"stored table scan is not dynamically pruned:\n$text")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("topKPerGroupExecRanked emits rank without a Window node") {

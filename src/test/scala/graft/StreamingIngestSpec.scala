@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.streaming.StreamingIngest
 
 /** End-to-end streaming ingest over a real watched directory: files arrive
@@ -67,6 +69,25 @@ class StreamingIngestSpec extends SparkSpec {
     val batchDoc = finishBuf(mergeBuf(mergeBuf(toBuf(a), toBuf(c)), toBuf(b)))
     assert(row.getAs[String]("type") === batchDoc.`type`)
     assert(row.getAs[String]("prefLabel") === batchDoc.prefLabel)
+  }
+
+  // Richness counts code points on both paths: a label outside the BMP is
+  // two UTF-16 units per character, and counting those made the batch
+  // Aggregator pick a different winner than the streaming merge.
+  test("batch and streaming merges pick the same winner for labels outside the BMP") {
+    import spark.implicits._
+    import graft.model.FastDoc
+    import graft.ingest.MergeFastDocs.{finishBuf, mergeBuf, toBuf}
+    val table = Files.createTempDirectory("graft_bmp_tbl").toString + "/fast"
+    // code points: 3+7=10 vs 5+7=12; UTF-16 units: 6+7=13 vs 12
+    val a = FastDoc(1, 1, "Topical", "\uD835\uDC9C\uD835\uDC9C\uD835\uDC9C", Nil, Nil, Nil, Nil)
+    val b = FastDoc(1, 1, "Topical", "BBBBB", Nil, Nil, Nil, Nil)
+    StreamingIngest.mergeBatch(spark, spark.createDataset(Seq(a, b)).toDF(), table)
+    val row = spark.read.parquet(table).collect().head
+    val batchDoc = finishBuf(mergeBuf(toBuf(a), toBuf(b)))
+    assert(batchDoc.prefLabel === "BBBBB")
+    assert(row.getAs[String]("prefLabel") === batchDoc.prefLabel)
+    assert(row.getAs[Int]("_bestRich") === 12)
   }
 
   // The full property the _bestRich bookkeeping claims: delivering the SAME
@@ -162,5 +183,45 @@ class StreamingIngestSpec extends SparkSpec {
     val docsReplayed = spark.read.parquet(table).select("_id", "prefLabel")
       .as[(Int, String)].collect().toMap
     assert(docsReplayed === docs, "replayed micro-batch changed table content")
+  }
+
+  // The merge's shuffle is keyed on the bucket, so a bucket is merged and
+  // written by one task whatever the partition count: one file per bucket,
+  // for a new table and for a merge into an existing one.
+  test("merge writes one file per touched bucket at any partition count") {
+    import spark.implicits._
+    import graft.model.FastDoc
+    val table = Files.createTempDirectory("graft_files_tbl").toString + "/fast"
+    def filesPerBucket(): Map[String, Int] = {
+      val dirs = Files.list(java.nio.file.Paths.get(table))
+      try dirs.iterator().asScala.filter(_.getFileName.toString.startsWith("_bucket="))
+        .map { d =>
+          val files = Files.list(d)
+          try d.getFileName.toString ->
+            files.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+          finally files.close()
+        }.toMap
+      finally dirs.close()
+    }
+    val tuned = Map(
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "4")
+    val saved = tuned.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    tuned.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      def docs(ids: Range) = spark.createDataset(
+        ids.map(i => FastDoc(i, i, "Topical", s"Doc $i", Nil, Nil, Nil, Nil))).toDF()
+      StreamingIngest.mergeBatch(spark, docs(1 to 200), table)
+      val first = filesPerBucket()
+      assert(first.size > 10, s"expected many buckets, got $first")
+      assert(first.values.forall(_ == 1), s"more than one file in a bucket: $first")
+      StreamingIngest.mergeBatch(spark, docs(101 to 300), table)
+      val second = filesPerBucket()
+      assert(second.values.forall(_ == 1), s"more than one file in a bucket: $second")
+      assert(spark.read.parquet(table).count() === 300L)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }
