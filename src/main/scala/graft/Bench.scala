@@ -342,6 +342,7 @@ object Bench {
     val failedJson = failedQs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val rebenchedJson = results.collect { case (k, _, _, true) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
+    val informational = SparkEntry.all.filter(_.informational).map(_.name)
     val informationalJson = informational.map("\"" + _ + "\"")
       .mkString("[", ",", "]")
     informational.foreach { k =>
@@ -367,23 +368,6 @@ object Bench {
     // capture, so nothing can trail the line.
     println(line)
   }
-
-  /** Bench-informational rows (VERDICT r11 #4): queries whose wall-clock
-    * is structural by construction rather than a comparable plan.
-    * `streaming_replay_q14` replays the table through REAL file-source
-    * micro-batches with a state store — the point of the row is the
-    * replay ⇒ batch-answer parity proven in CORRECTNESS, and racing N
-    * triggers + state snapshots against one batch SQL statement is not a
-    * plan comparison. `sink_merge_into` is the same shape at the sink:
-    * three complete write → read → merge → commit-cleanup filesystem
-    * cycles (the deploy-shaped upsert semantics under test) raced
-    * against the oracle's one closed-form fold. Still timed and counted
-    * in the total (nothing is hidden); flagged in BENCH_FULL and on
-    * stderr.
-    */
-  private[graft] val informational: Set[String] =
-    Set("streaming_replay_q14", "streaming_replay_dedup", "sink_merge_into",
-      "streaming_replay_sessionize")
 
   /** The stdout line's query subset: the reference-core dataflow plus the
     * most scale-relevant representative of each operator family. The

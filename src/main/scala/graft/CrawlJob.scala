@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{CharsetSniff, Html, PdfText}
+import graft.queries.CrawlQueries
 import graft.sources.WarcReader
 
 /** End-to-end crawl ingestion job — the crawl-stack twin of
@@ -175,7 +176,7 @@ object CrawlJob {
                   flate = true))
             } else WarcReader.WriteRec("response", uri, "", 200,
               "text/html; charset=utf-8",
-              SparkEntry.htmlFixturePage(id, text).getBytes("UTF-8"),
+              CrawlQueries.htmlFixturePage(id, text).getBytes("UTF-8"),
               chunked = id % 2 == 0)
           // one deliberate exact duplicate body under another URL
           if (id == 7)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.queries.CrawlQueries
+
 /** sf1 scale-curve smoke for the headline ops (VERDICT r15 #2): run each
   * op at sf0.1 and at a synthesized 10× (sf1-equivalent) volume in the
   * same warm JVM, and HARD-ASSERT near-linear growth (ratio ≤ 12×). This
@@ -135,7 +137,7 @@ object ScaleCurveSmoke {
         .flatMap { case (id, text) =>
           val shard = WarcReader.writeShardGz(Seq(WarcReader.WriteRec(
             "response", s"http://c.example/doc/$id", "", 200, "text/html",
-            SparkEntry.htmlFixturePage(id, text).getBytes("UTF-8"),
+            CrawlQueries.htmlFixturePage(id, text).getBytes("UTF-8"),
             chunked = id % 2 == 0)))
           WarcReader.parseShard(s"d$id",
               WarcReader.inflateShard(shard).get)._1

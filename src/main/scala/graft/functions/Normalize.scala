@@ -14,7 +14,8 @@ import java.text.Normalizer
   * `normalize` is deliberately mirror-able in ANSI SQL
   * (`lower` + `strip_accents` + two `regexp_replace`) so the DuckDB oracle can
   * replicate it exactly; `singularize` uses a fixed rule chain that is likewise
-  * regex-expressible (see SparkEntry.oracleSql).
+  * regex-expressible (see `QueryHelpers.normSql` and `IngestQueries.singSql`
+  * in graft.queries).
   */
 object Normalize {
 
@@ -79,7 +80,7 @@ object Normalize {
     * The reference's `singularize` comes from an unvendored package; these
     * rules are our pinned deterministic definition (SURVEY.md §1.4), and
     * they are mirrored regex-for-regex in the DuckDB oracle
-    * (SparkEntry.singSql).
+    * (`IngestQueries.singSql` in graft.queries).
     */
   val Irregulars: Map[String, String] = Map(
     "men" -> "man", "women" -> "woman", "children" -> "child",

@@ -56,19 +56,12 @@ object Sinks {
     * (bucketing metadata lives in the session catalog).
     */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    numBuckets: Int = 32): Unit =
+                    numBuckets: Int): Unit =
     df.write.mode("overwrite")
       .bucketBy(numBuckets, bucketCol)
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(table)
-
-  /** Default bucket count for [[mergeInto]] tables — same sizing rule as
-    * [[graft.streaming.StreamingIngest.DefaultBuckets]]: at deploy pick
-    * ~table_size / target_partition_size; merge cost scales with touched
-    * buckets, so more buckets = finer-grained rewrites.
-    */
-  val MergeBuckets = 64
 
   /** Generic MERGE INTO over a manifest-committed hash-bucket parquet
     * layout — the deploy-shaped upsert API for the reference's
@@ -124,7 +117,7 @@ object Sinks {
     * the table was created with.
     */
   def mergeInto(spark: SparkSession, targetPath: String, updates: DataFrame,
-                keyCol: String, numBuckets: Int = MergeBuckets,
+                keyCol: String, numBuckets: Int,
                 deleteCol: Option[String] = None,
                 onPhase: String => Unit = _ => ()): Unit = {
     val bucket = pmod(xxhash64(col(keyCol)), lit(numBuckets.toLong)).cast("int")
@@ -135,7 +128,7 @@ object Sinks {
     // The touched-bucket list drives the stored-side manifest prune and
     // the commit, so it is brought to the driver ONCE, through an
     // observe() metric on a one-column pass over the batch — the list is
-    // bounded by `numBuckets` (a layout constant, 64 by default), never
+    // bounded by `numBuckets` (a layout constant), never
     // by data size, so this is a counters-class driver value, not a data
     // collect.
     val touchedBuckets: Seq[Int] = {

@@ -3,25 +3,19 @@ package graft
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.Query
+
 /** Driver-contract invariants — catches drift that would silently weaken
   * the correctness gate.
   */
 class ContractSpec extends AnyFunSuite with SparkSpec {
 
-  /** Queries whose semantics one SQL statement cannot express. EMPTY as
-    * of round 6 — even bpe_merges' sequential merge recurrence unrolls
-    * into 10 chained CTE stages (recursive CTEs can't re-aggregate per
-    * step, but a FIXED merge count needs no recursion). Additions here
-    * need a written justification in the query's scaladoc plus a golden
-    * spec, or they silently weaken the gate.
-    */
-  private val rowsOnlyByDesign = Set.empty[String]
-
+  // `oracle` is a required field, so a query cannot be registered without
+  // one; a blank string would still slip through and silently weaken the
+  // gate to rows-only.
   test("every query has a DuckDB oracle (or a justified rows-only entry)") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- rowsOnlyByDesign
-    assert(missing.isEmpty, s"queries without oracle (rows-only downgrade!): $missing")
-    val stale = rowsOnlyByDesign -- SparkEntry.queries.keySet
-    assert(stale.isEmpty, s"rows-only allowlist entries with no query: $stale")
+    val blank = SparkEntry.all.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries with a blank oracle (rows-only downgrade!): $blank")
   }
 
   test("every bench headline name is a real query") {
@@ -31,14 +25,17 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     assert(orphans.isEmpty, s"headline names without a query: $orphans")
   }
 
+  // A duplicate name in the registry would vanish silently into the
+  // name-keyed views: one of the two queries (and its oracle) would never run.
   test("no orphan oracles") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without a query: $orphans")
+    val dups = SparkEntry.all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"query names registered more than once: $dups")
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
   test("every oracle ends with a deterministic ORDER BY") {
-    val bad = SparkEntry.oracleSql.filterNot(_._2.toUpperCase.contains("ORDER BY"))
-    assert(bad.isEmpty, s"oracles without ORDER BY (positional compare!): ${bad.keySet}")
+    val bad = SparkEntry.all.filterNot(_.oracle.toUpperCase.contains("ORDER BY")).map(_.name)
+    assert(bad.isEmpty, s"oracles without ORDER BY (positional compare!): $bad")
   }
 
   // Scale guard: a CartesianProduct in any query's physical plan means a
@@ -48,7 +45,7 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
   // appears as BroadcastNestedLoopJoin, not CartesianProduct.)
   test("no CartesianProduct in any query's physical plan") {
     val dir = "/root/testdata/sf0.001"
-    val bad = SparkEntry.queries.flatMap { case (name, q) =>
+    val bad = SparkEntry.all.flatMap { case Query(name, q, _, _) =>
       val plan = q(spark, dir).queryExecution.executedPlan.toString
       if (plan.contains("CartesianProduct")) Some(name) else None
     }
@@ -67,7 +64,7 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     val dir = "/root/testdata/sf0.001"
     spark.conf.set("spark.graft.forbidGlobalWindows", "true")
     try {
-      val bad = SparkEntry.queries.flatMap { case (name, q) =>
+      val bad = SparkEntry.all.flatMap { case Query(name, q, _, _) =>
         try { q(spark, dir).queryExecution.analyzed; None }
         catch {
           case e: Throwable
@@ -90,7 +87,7 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     val dir = "/root/testdata/sf0.001"
     spark.conf.set("spark.graft.forbidPartitionIdWindows", "true")
     try {
-      val bad = SparkEntry.queries.flatMap { case (name, q) =>
+      val bad = SparkEntry.all.flatMap { case Query(name, q, _, _) =>
         try { q(spark, dir).queryExecution.analyzed; None }
         catch {
           case e: Throwable
@@ -109,7 +106,7 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
   // Serialize with to_json in the verification projection instead.
   test("no top-level ARRAY/STRUCT/MAP in any query output schema") {
     val dir = "/root/testdata/sf0.001"
-    val bad = SparkEntry.queries.flatMap { case (name, q) =>
+    val bad = SparkEntry.all.flatMap { case Query(name, q, _, _) =>
       val complexCols = q(spark, dir).schema.fields.collect {
         case f if f.dataType.isInstanceOf[ArrayType] ||
           f.dataType.isInstanceOf[StructType] ||
@@ -140,5 +137,19 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     val undocumented = mains.filterNot(m => s"\\b$m\\b".r.findFirstIn(readme).isDefined)
     assert(undocumented.isEmpty,
       s"mains missing from README.md: ${undocumented.toSeq.sorted.mkString(", ")}")
+  }
+
+  // One file per query family keeps each family reviewable on its own; a
+  // family that outgrows the bound splits in two (relational and TPC-H).
+  test("no file under src/main/scala is over 1,500 lines") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
+    val long = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> Files.readAllLines(p).size)
+      .collect { case (p, n) if n > 1500 => s"$p ($n lines)" }.toSeq.sorted
+    assert(long.isEmpty, s"main-source files over 1,500 lines: ${long.mkString(", ")}")
   }
 }

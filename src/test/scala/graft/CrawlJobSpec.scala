@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.functions._
 
 import graft.ops.PdfText
+import graft.queries.CrawlQueries
 import graft.sources.WarcReader
 
 /** CrawlJob integration: mixed HTML/PDF shards → documents + frontier +
@@ -16,7 +17,7 @@ class CrawlJobSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("crawljob_spec_")
     def html(id: Long, text: String) = WarcReader.WriteRec("response",
       s"http://site.example/doc/$id", "", 200, "text/html; charset=utf-8",
-      SparkEntry.htmlFixturePage(id, text).getBytes(UTF_8))
+      CrawlQueries.htmlFixturePage(id, text).getBytes(UTF_8))
     val pdfBody = PdfText.pdfBytes(Seq(Seq("Doc 2", "pdf body words here ok")),
       flate = true)
     val recs = Seq(
