@@ -232,15 +232,15 @@ object ScaleCurveSmoke {
       ("suffix_array",
         () => graft.ops.SuffixArray.build(docs1, "text", "doc_id"),
         () => graft.ops.SuffixArray.build(docsN, "text", "doc_id")),
-      // localBound = 0 pins the DISTRIBUTED wedge path at both sizes: the
+      // withBound(0) pins the DISTRIBUTED wedge path at both sizes: the
       // shipped local endgame would otherwise fire at 1× and not at 10×,
       // making the ratio compare two different algorithms — the curve's
       // question is how the scale path grows
       ("graph_triangles",
-        () => graft.ops.Graph.triangleCountImpl(coEdges(false), "src", "dst",
-          neighborListWedges = None, localBound = 0L),
-        () => graft.ops.Graph.triangleCountImpl(coEdges(true), "src", "dst",
-          neighborListWedges = None, localBound = 0L)),
+        () => graft.ops.LocalEndgame.withBound(0)(
+          graft.ops.Graph.triangleCount(coEdges(false), "src", "dst")),
+        () => graft.ops.LocalEndgame.withBound(0)(
+          graft.ops.Graph.triangleCount(coEdges(true), "src", "dst"))),
       // mirrors the r17 query call site: the one-split source is widened to
       // session parallelism before the heavy winnow pass (without it the
       // 10× clone explodes inside ONE scan task and the curve measures the

@@ -35,6 +35,22 @@ object Bpe {
   private def replQuote(c: Column): Column =
     regexp_replace(c, "([\\\\$])", "\\\\$1")
 
+  /** UTF8-byte comparison — Spark's binary string ordering, which the
+    * argmax tie-break below must reproduce exactly (Java's compareTo is
+    * UTF-16 code-unit order, which differs beyond the BMP). */
+  private def utf8Cmp(a: String, b: String): Int = {
+    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    var i = 0
+    val n = math.min(x.length, y.length)
+    while (i < n) {
+      val d = (x(i) & 0xff) - (y(i) & 0xff)
+      if (d != 0) return d
+      i += 1
+    }
+    x.length - y.length
+  }
+
   /** Learn up to `numMerges` merge rules. Output: `(rank, left, right,
     * pair_freq)`, rank-ordered — merge r was the most frequent adjacent
     * symbol pair (ties broken lexicographically) after merges 1..r−1.
@@ -52,37 +68,7 @@ object Bpe {
     * sequential (the algorithm); only the fixed per-round job count
     * changes, which is the dominant cost at vocabulary scale.
     */
-  def learnMerges(df: DataFrame, textCol: String, numMerges: Int): DataFrame =
-    learnMergesImpl(df, textCol, numMerges, LocalVocabRowBound)
-
-  /** Row / character bounds for the driver-local merge-round endgame: the
-    * vocabulary table is collected blind with a row cap (the LPA
-    * limit-guarded probe — no count job), then re-checked on total symbol
-    * characters so a short-row-count but fat-symbol vocab stays
-    * distributed. 256k words / 16M chars ≈ 32 MB of UTF-16 — the same
-    * order as the graph endgames' 2M-long-entry bound.
-    */
-  private val LocalVocabRowBound = 1 << 18
-  private val LocalVocabCharBound = 1L << 24
-
-  /** UTF8-byte comparison — Spark's binary string ordering, which the
-    * argmax tie-break below must reproduce exactly (Java's compareTo is
-    * UTF-16 code-unit order, which differs beyond the BMP). */
-  private def utf8Cmp(a: String, b: String): Int = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    x.length - y.length
-  }
-
-  private[graft] def learnMergesImpl(df: DataFrame, textCol: String,
-      numMerges: Int, localRowBound: Int): DataFrame = {
+  def learnMerges(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
     val spark = df.sparkSession
     val words0 = df
       .select(explode(split(col(textCol), " ")).as("w"))
@@ -96,25 +82,24 @@ object Bpe {
     // LOCAL ENDGAME (r17): everything after the corpus→vocabulary
     // aggregation is vocabulary-sized, and the merge rounds are
     // inherently sequential — distributed, each round is a fixed
-    // scheduling + checkpoint cost on a tiny frame. Under the bounds the
+    // scheduling + checkpoint cost on a tiny frame. Under the bound the
     // rounds run on the driver over the collected vocab: identical
     // semantics (same adjacency counts, argmax ordered by freq desc then
     // UTF8-byte-lexicographic (left, right), same greedy left-to-right
     // non-overlapping merge the lookaround regexp_replace applies), so
     // the learned table is bit-identical (BpeSpec pins local ==
-    // distributed). Above the bounds the distributed rounds below run
-    // unchanged — a 100 TB corpus with a multi-million-word vocabulary
-    // takes that path; per-language/code vocabularies stay local.
-    val probe =
-      if (localRowBound > 0)
-        words.df.select("syms", "freq").limit(localRowBound + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    val localOk = localRowBound > 0 && probe.length <= localRowBound &&
-      probe.iterator.map(_.getString(0).length.toLong).sum <= LocalVocabCharBound
-    if (localOk) {
+    // distributed). A multi-million-word vocabulary, or a fat-symbol one,
+    // runs the distributed rounds below.
+    val probe = LocalEndgame.collect("learnMerges",
+      words.df.select("syms", "freq"),
+      minRowBytes = 8 + LocalEndgame.RowOverhead,
+      (r: org.apache.spark.sql.Row) =>
+        8 + LocalEndgame.RowOverhead + 2L * r.getString(0).length)
+    if (probe.isDefined) {
+      val vocab = probe.get
       words.release()
-      val syms = probe.map(_.getString(0).split(" "))
-      val freq = probe.map(_.getLong(1))
+      val syms = vocab.map(_.getString(0).split(" "))
+      val freq = vocab.map(_.getLong(1))
       var r = 1
       var done = false
       while (r <= numMerges && !done) {
@@ -204,7 +189,7 @@ object Bpe {
       val next = Iterate.materialize(merged)
       // carried argmax columns are identical on every row — read one
       val head = next.df.select(col("left"), col("right"), col("pair_freq"))
-        .limit(1).collect()
+        .head(1)
       if (head.isEmpty) { next.release(); done = true }
       else {
         learned += ((r, head(0).getString(0), head(0).getString(1), head(0).getLong(2)))

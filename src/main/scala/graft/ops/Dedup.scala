@@ -202,11 +202,11 @@ object Dedup {
     * ([[Iterate.materialize]]) — no session-global configuration, memory
     * O(1) in round count. At 100 TB every step is a key-partitioned
     * aggregation or equi-join on node id — AQE handles skew (a hot star
-    * center is the skew-join case) and coalesces the contracted tail.
+    * center is the skew-join case) and coalesces the contracted tail; a
+    * [[LocalEndgame]]-sized remainder finishes as one-task union-find.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIterations: Int = 50,
-                          localSolveLimit: Long = LocalSolveEdgeLimit): DataFrame = {
+                          maxIterations: Int = 50): DataFrame = {
     // canonical undirected edges, bigger endpoint first; ids normalized
     // to BIGINT so the distributed and local-endgame paths emit one schema.
     // Only integral id columns are accepted: a silent `.cast("long")` of a
@@ -271,25 +271,21 @@ object Dedup {
       val observed = e.observe(obs,
         count(lit(1)).as("cnt"),
         coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)).as("sig"))
-      val t0 = System.nanoTime()
       val materialized = graft.ops.Iterate.materialize(observed)
       val cnt = obs.get("cnt").asInstanceOf[Long]
       val sig = obs.get("sig").asInstanceOf[Long]
       converged = cnt == prevCnt && sig == prevSig
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] cut $i: ${(System.nanoTime() - t0) / 1e9}%.2f s edges=$cnt")
       prevCnt = cnt
       prevSig = sig
       round.release()
       round = materialized
       i += RoundsPerCut
-      // ENDGAME: contraction monotonically shrinks the edge set; once it
-      // fits one task's working set, log-d more distributed rounds cost
-      // more in per-round job overhead than a single-task union-find —
-      // the standard hybrid in production CC implementations. The count
-      // rides the round's observe, so the switch costs zero extra jobs,
-      // and the label (component MIN) is identical to the fixpoint's.
-      if (!converged && cnt > 0 && cnt <= localSolveLimit) {
+      // ENDGAME: contraction shrinks the edge set toward the bound (2
+      // longs per edge), where log-d more rounds cost more in job overhead
+      // than a single-task union-find. The count rides the round's
+      // observe (zero extra jobs); the label (component MIN) is the
+      // fixpoint's.
+      if (!converged && cnt > 0 && LocalEndgame.fits("connectedComponents", cnt, 16)) {
         val spark = round.df.sparkSession
         val session = spark.implicits
         import session._
@@ -388,12 +384,6 @@ object Dedup {
       .select(col("node"), col("cluster_id"))
       .unionByName(recomputed.select(col("node"), col("cluster_id")))
   }
-
-  /** Edge-count bound for the CC endgame's single-task union-find: 2M
-    * (src, dst) longs ≈ 32 MB — one task's working set. Above it, rounds
-    * stay distributed; contraction shrinks every graph toward the bound.
-    */
-  private val LocalSolveEdgeLimit = 2_000_000L
 
   /** Union-find with path compression over one partition's edges,
     * relabeled so every node maps to its component MINIMUM — the same

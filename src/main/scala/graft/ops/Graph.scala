@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -182,11 +184,12 @@ object Graph {
     * (HashPartitioning(node) satisfies both groupings). Adjacency rows
     * bound task memory by max-degree — fine for the bounded-degree
     * co-occurrence graphs this engine builds. Rounds chain lazily, cut
-    * every [[Iterate.LazyRounds]]. Output: (node, label).
+    * every [[Iterate.LazyRounds]]. An adjacency that fits the
+    * [[LocalEndgame]] bound runs the same rounds on the driver instead.
+    * Output: (node, label).
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       iterations: Int = 10,
-                       localBound: Long = LocalIterationBound): DataFrame = {
+                       iterations: Int = 10): DataFrame = {
     val pairs = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
@@ -202,7 +205,7 @@ object Graph {
     // output with its own label, not vanish
     val nodes = pairs.select(col("src").as("node"))
       .unionAll(pairs.select(col("dst").as("node"))).distinct()
-    labelPropagationAdj(adj, nodes, iterations, localBound)
+    labelPropagationAdj(adj, nodes, iterations)
   }
 
   /** [[labelPropagation]] over a caller-built adjacency table `(src,
@@ -220,9 +223,8 @@ object Graph {
     * keys — extra nodes keep their own label.
     */
   def labelPropagationAdj(adjacency: DataFrame, nodeSet: DataFrame,
-                          iterations: Int,
-                          localBound: Long = LocalIterationBound): DataFrame =
-    labelPropagationAdjImpl(adjacency, Some(nodeSet), iterations, localBound)
+                          iterations: Int): DataFrame =
+    labelPropagationAdjImpl(adjacency, Some(nodeSet), iterations)
 
   /** [[labelPropagationAdj]] when the node set IS the adjacency key set
     * (every node has ≥ 1 neighbor): with symmetric adjacency, every round
@@ -231,81 +233,46 @@ object Graph {
     */
   def labelPropagationAdj(adjacency: DataFrame,
                           iterations: Int): DataFrame =
-    labelPropagationAdjImpl(adjacency, None, iterations, LocalIterationBound)
-
-  /** Collected-entry bound under which BFS / label propagation finish on
-    * the driver instead of paying per-round exchange scheduling: the
-    * SCC-endgame pattern (threshold-guarded collect, adjudicated r15)
-    * generalized to the other iterative ops. The collected state is flat
-    * longs — 2M entries ≈ 32 MB — so the guard is a DATA bound, not a
-    * recursion-depth bound like SCC's 2^16; above it the distributed
-    * rounds (whose per-round fixed cost amortizes exactly there) run
-    * unchanged. The decision is a limit-guarded BLIND collect — no
-    * persist, no count job (both measured slower than the collect they
-    * would guard, r16). (GraphSmoke's 1.6M-edge fixture keeps its
-    * adjacency above the bound on purpose — the smokes keep exercising
-    * the distributed rounds.)
-    */
-  private[graft] val LocalIterationBound = 1L << 21
-
-  /** Row bound for the limit-guarded adjacency probe: rows are per-node
-    * neighbor ARRAYS, so the row cap bounds the decode count and the
-    * post-collect entry recheck bounds total memory. (A row's array can
-    * in principle be huge, but an adjacency representation with a
-    * 100M-neighbor row breaks in the executor building it long before
-    * this collect — the row cap is the practical guard.)
-    */
-  private val LocalAdjRowBound = 1 << 18
+    labelPropagationAdjImpl(adjacency, None, iterations)
 
   private def labelPropagationAdjImpl(adjacency: DataFrame,
                           nodeSet: Option[DataFrame],
-                          iterations: Int,
-                          localBound: Long): DataFrame = {
-    // BLIND limit-guarded probe, no persist: a cache write of the
-    // array-typed adjacency costs more than the whole local endgame
-    // (measured r16 — persist+stats+collect 1.05 s vs bare collect
-    // 0.8 s at sf0.1), so the local decision collects directly with a
-    // row cap and falls back (re-deriving the adjacency) only when the
-    // graph is big enough that the distributed rounds dominate anyway.
-    val probe =
-      if (localBound <= 0) Array.empty[org.apache.spark.sql.Row]
-      else adjacency.select(col("src"), col("nbrs"))
-        .limit(LocalAdjRowBound + 1).collect()
-    val probeEntries =
-      if (localBound > 0 && probe.length <= LocalAdjRowBound)
-        probe.length.toLong + probe.iterator.map(_.getSeq[Long](1).length.toLong).sum
-      else Long.MaxValue
-    if (probeEntries <= localBound) {
-      val nodesOpt0 = nodeSet
-      val labelsLocal = localLabelProp(adjacency.sparkSession, probe, iterations)
-      // (r17: dropping this materialize on the local endgame measured
-      // flat-to-slightly-SLOWER in interleaved A/B — the checkpoint is a
-      // 2k-row write and the consumer re-reads it cheaper than the
-      // createDataFrame re-encode — so the shape stays)
-      val out = Iterate.materialize(nodesOpt0 match {
-        case Some(nodes) => nodes
-          .join(labelsLocal, Seq("node"), "left")
-          .select(col("node"), coalesce(col("label"), col("node")).as("label"))
-        case None => labelsLocal
-      })
-      return out.df
-    }
-    val adj = adjacency.persist(StorageLevel.MEMORY_AND_DISK)
-    val nodesOpt = nodeSet.map(_.persist(StorageLevel.MEMORY_AND_DISK))
-    val (labels, pending) = distributedLabelRounds(adj, iterations)
-    // isolated nodes (no non-self-loop neighbors) keep their own label;
-    // materialized so the returned frame stays cheap to re-consume after
-    // the backing caches are dropped (same contract as before: the caller
-    // gets a lineage-cut result, GC reclaims the checkpoint)
-    val out = Iterate.materialize(nodesOpt match {
-      case Some(nodes) => nodes
+                          iterations: Int): DataFrame = {
+    // no persist before the probe: a cache write of the array-typed
+    // adjacency costs more than the whole local endgame (measured r16 —
+    // persist+stats+collect 1.05 s vs bare collect 0.8 s at sf0.1)
+    val probe = LocalEndgame.collect("labelPropagation",
+      adjacency.select(col("src"), col("nbrs")),
+      minRowBytes = 8 + LocalEndgame.RowOverhead,
+      (r: org.apache.spark.sql.Row) =>
+        8 + LocalEndgame.RowOverhead + 8L * r.getSeq[Long](1).length)
+    // isolated nodes (no non-self-loop neighbors) keep their own label
+    def withIsolated(nodes: Option[DataFrame], labels: DataFrame) = nodes match {
+      case Some(ns) => ns
         .join(labels, Seq("node"), "left")
         .select(col("node"), coalesce(col("label"), col("node")).as("label"))
       case None => labels
-    })
-    pending.foreach(_.release())
-    adj.unpersist(); nodesOpt.foreach(_.unpersist())
-    out.df
+    }
+    probe match {
+      case Some(rows) =>
+        // (r17: dropping this materialize on the local endgame measured
+        // flat-to-slightly-SLOWER in interleaved A/B — the checkpoint is a
+        // 2k-row write and the consumer re-reads it cheaper than the
+        // createDataFrame re-encode — so the shape stays)
+        Iterate.materialize(withIsolated(nodeSet,
+          localLabelProp(adjacency.sparkSession, rows, iterations))).df
+      case None =>
+        val adj = adjacency.persist(StorageLevel.MEMORY_AND_DISK)
+        val nodesOpt = nodeSet.map(_.persist(StorageLevel.MEMORY_AND_DISK))
+        val (labels, pending) = distributedLabelRounds(adj, iterations)
+        // materialized so the returned frame stays cheap to re-consume
+        // after the backing caches are dropped (the caller gets a
+        // lineage-cut result, GC reclaims the checkpoint)
+        val out = Iterate.materialize(withIsolated(nodesOpt, labels))
+        pending.foreach(_.release())
+        adj.unpersist(); nodesOpt.foreach(_.unpersist())
+        out.df
+    }
   }
 
   /** The distributed synchronous rounds (original shape): one message
@@ -343,7 +310,7 @@ object Graph {
     * [[distributedLabelRounds]] (same seed, same per-round vote tally,
     * same (count desc, label asc) tie-break, and the same
     * drops-nodes-with-no-incoming-votes behavior that the final
-    * graft-back join repairs). Guarded by [[LocalIterationBound]].
+    * graft-back join repairs). Guarded by [[LocalEndgame]].
     */
   private def localLabelProp(sess: org.apache.spark.sql.SparkSession,
       probe: Array[org.apache.spark.sql.Row], iterations: Int): DataFrame = {
@@ -377,10 +344,32 @@ object Graph {
       labels = nl
       i += 1
     }
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val it = labels.entrySet().iterator()
-    while (it.hasNext) { val e = it.next(); buf += ((e.getKey, e.getValue)) }
-    buf.toSeq.toDF("node", "label")
+    labels.asScala.toSeq.toDF("node", "label")
+  }
+
+  /** Driver-local [[bfsLevels]]: the same first-arrival levels. */
+  private def localBfs(edges: Array[(Long, Long)], sources: Array[Long],
+      maxLevels: Int): Seq[(Long, Long)] = {
+    val adjLocal = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
+    edges.foreach { case (u, v) =>
+      adjLocal.computeIfAbsent(u,
+        _ => scala.collection.mutable.ArrayBuffer.empty) += v
+    }
+    val level = new java.util.HashMap[Long, Long]()
+    var frontier: Seq[Long] = sources.toSeq
+    frontier.foreach(n => level.put(n, 0L))
+    var lvl = 0L
+    while (lvl < maxLevels && frontier.nonEmpty) {
+      val next = scala.collection.mutable.HashSet.empty[Long]
+      frontier.foreach { u =>
+        val ns = adjLocal.get(u)
+        if (ns != null) ns.foreach { v => if (!level.containsKey(v)) next += v }
+      }
+      lvl += 1
+      frontier = next.toSeq
+      frontier.foreach(n => level.put(n, lvl))
+    }
+    level.asScala.toSeq
   }
 
   /** BFS reachability levels over a directed edge list from a source
@@ -401,8 +390,7 @@ object Graph {
   def bfsLevels(edges: DataFrame, srcCol: String, dstCol: String,
                 sources: DataFrame, sourceCol: String,
                 maxLevels: Int = 10,
-                edgesDistinct: Boolean = false,
-                localBound: Long = LocalIterationBound): DataFrame = {
+                edgesDistinct: Boolean = false): DataFrame = {
     // NULL endpoints carry no reachability and a NULL source would emit a
     // NULL node at level 0 — drop both explicitly (the =!= filter already
     // rejects null-null rows, but null-to-value edges must not survive
@@ -423,52 +411,23 @@ object Graph {
     // exchange (measured twice, rounds 8 and 9: ~1.9s → ~2.9s at sf0.1).
     // On a cluster where frontiers outgrow the broadcast threshold,
     // repartition the edge list on src before calling.
-    // BLIND limit-guarded probe of the RAW (pre-distinct) edges: a
-    // sub-bound graph finishes as a driver-local BFS — identical
-    // first-arrival levels, none of the per-level join/anti-join
-    // scheduling, and duplicate edges are harmless to the level map so
-    // the dedup exchange is skipped entirely. No persist/count: the
-    // cache write + count job cost more than the bare collect (measured
-    // r16). An over-bound graph pays one abandoned bounded collect
-    // (≤ bound+1 flat rows) and re-derives the edges distributed.
+    val srcNodes = sources.select(col(sourceCol).cast("long").as("node"))
+      .where(col("node").isNotNull).distinct()
+    // a sub-bound graph AND source set finish as a driver-local BFS over
+    // the RAW (pre-distinct) edges — duplicate edges are harmless to the
+    // level map, so the dedup exchange is skipped entirely
     val sess0 = eRaw.sparkSession
     import sess0.implicits._
-    val probe =
-      if (localBound <= 0) Array.empty[(Long, Long)]
-      else eRaw.as[(Long, Long)].limit(localBound.toInt + 1).collect()
-    if (localBound > 0 && probe.length <= localBound) {
-      val adjLocal = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      probe.foreach { case (u, v) =>
-        adjLocal.computeIfAbsent(u,
-          _ => scala.collection.mutable.ArrayBuffer.empty) += v
-      }
-      val level = new java.util.HashMap[Long, Long]()
-      var frontier: Seq[Long] = sources
-        .select(col(sourceCol).cast("long").as("node"))
-        .where(col("node").isNotNull).distinct()
-        .as[Long].collect().toSeq
-      frontier.foreach(n => level.put(n, 0L))
-      var lvl = 0L
-      while (lvl < maxLevels && frontier.nonEmpty) {
-        val next = scala.collection.mutable.HashSet.empty[Long]
-        frontier.foreach { u =>
-          val ns = adjLocal.get(u)
-          if (ns != null) ns.foreach { v => if (!level.containsKey(v)) next += v }
-        }
-        lvl += 1
-        frontier = next.toSeq
-        frontier.foreach(n => level.put(n, lvl))
-      }
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      val it = level.entrySet().iterator()
-      while (it.hasNext) { val en = it.next(); buf += ((en.getKey, en.getValue)) }
-      return buf.toSeq.toDF("node", "level")
-    }
+    val local = for {
+      es <- LocalEndgame.collect("bfsLevels.edges", eRaw.as[(Long, Long)], 16,
+        (_: (Long, Long)) => 16L)
+      ss <- LocalEndgame.collect("bfsLevels.sources", srcNodes.as[Long], 8,
+        (_: Long) => 8L)
+    } yield localBfs(es, ss, maxLevels)
+    if (local.isDefined) return local.get.toDF("node", "level")
     val e = (if (edgesDistinct) eRaw else eRaw.distinct())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val src0 = sources.select(col(sourceCol).cast("long").as("node"))
-      .where(col("node").isNotNull).distinct()
-      .withColumn("level", lit(0L))
+    val src0 = srcNodes.withColumn("level", lit(0L))
     if (maxLevels <= Iterate.LazyRounds) {
       // Bounded depth: no per-round driver action at all. Each frontier is
       // consumed by the next level's edge join, by every later level's
@@ -642,8 +601,7 @@ object Graph {
     * of a separate driver count.
     */
   private[graft] def triangleCountImpl(edges: DataFrame, srcCol: String,
-      dstCol: String, neighborListWedges: Option[Boolean],
-      localBound: Long = LocalIterationBound): DataFrame = {
+      dstCol: String, neighborListWedges: Option[Boolean]): DataFrame = {
     val eObs = org.apache.spark.sql.Observation()
     val em = Iterate.materialize(
       edges.select(
@@ -654,19 +612,16 @@ object Graph {
         .observe(eObs, count(lit(1)).as("m")))
     val e = em.df
     val nEdges = eObs.get("m").asInstanceOf[Long]
-    // LOCAL ENDGAME (r17): under the same 2M-flat-long-entry data bound
-    // as the BFS/LPA endgames ([[LocalIterationBound]]; 2 longs per edge,
-    // ≈ 32 MB collected), the whole census — degree, orientation, wedge
-    // probe — runs on the driver off the edge checkpoint the op already
-    // paid for, and the decision is FREE: the observe-carried exact edge
-    // count, no probe job. This removes the wedge job's two cache fills,
-    // three broadcast builds and the closure semi-join, each a
-    // scheduling barrier that dominates sub-bound graphs. Above the
-    // bound the distributed wedge path runs unchanged (GraphSmoke's
-    // 1.6M-edge fixture stays above it on purpose; ScaleCurveSmoke pins
-    // localBound = 0 so the 1×/10× curve compares one algorithm).
-    // A forced wedge build (`neighborListWedges` set) bypasses it too.
-    if (neighborListWedges.isEmpty && 2 * nEdges <= localBound) {
+    // LOCAL ENDGAME (r17): when the edge list fits the [[LocalEndgame]]
+    // bound (2 longs per edge), the whole census — degree, orientation,
+    // wedge probe — runs on the driver off the edge checkpoint the op
+    // already paid for, decided by the observe-carried edge count (no
+    // probe job). This removes the wedge job's two cache fills, three
+    // broadcast builds and the closure semi-join, each a scheduling
+    // barrier that dominates sub-bound graphs. A forced wedge build
+    // (`neighborListWedges` set) bypasses it.
+    if (neighborListWedges.isEmpty &&
+        LocalEndgame.fits("triangleCount", nEdges, 16)) {
       val rows = e.collect()
       em.release()
       val (nNodes, nTri) = localTriangleCensus(rows)
@@ -772,25 +727,22 @@ object Graph {
     * an under-iterated SCC answer is WRONG, not approximate (same
     * contract as SuffixArray.build's convergence check).
     *
-    * LOCAL ENDGAME (r14): once the live remainder fits one task
-    * (`localThreshold` bounds BOTH live nodes and live edges — a
-    * broadcast-class constant, not data-sized), the loop collects it
-    * and finishes with iterative Tarjan on the driver, labeling each
+    * LOCAL ENDGAME (r14): once the live remainder (nodes and edges, up
+    * to 2 longs each) fits the [[LocalEndgame]] bound, the loop collects
+    * it and finishes with iterative Tarjan on the driver, labeling each
     * component by its min member — bit-identical to what further
     * distributed rounds would settle. This is the standard hybrid of
     * the parallel-SCC literature (Hong et al. PPoPP'13, Slota et al.
     * '14: trim + FW-BW descent, serial finish on the small remainder):
     * the descent's tail rounds each cost full scheduling to settle a
     * shrinking fringe, which is exactly the regime a single task
-    * finishes in microseconds. Pass `localThreshold = 0` to force the
-    * pure distributed path (specs exercise both).
+    * finishes quickly.
     *
     * Returns (node, scc_id) with scc_id = the component's minimum
     * member id.
     */
   def stronglyConnectedComponents(edges: DataFrame, srcCol: String,
-      dstCol: String, maxOuter: Int = 25, maxInner: Int = 100,
-      localThreshold: Long = 1L << 16): DataFrame = {
+      dstCol: String, maxOuter: Int = 25, maxInner: Int = 100): DataFrame = {
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull &&
@@ -823,9 +775,8 @@ object Graph {
     // would otherwise strand `live` + every settled label checkpoint
     // (r14 review — the same leak class the maxOuter path releases)
     try while (nLive > 0 && outer < maxOuter) {
-      if (nLive <= localThreshold && mLive <= localThreshold) {
-        // local endgame: the remainder is broadcast-sized — one collect,
-        // serial Tarjan, done (see scaladoc)
+      if (LocalEndgame.fits("stronglyConnectedComponents", nLive + mLive, 16)) {
+        // local endgame: one collect, serial Tarjan, done (see scaladoc)
         val edgeArr = live.df.collect()
           .map(r => (r.getLong(0), r.getLong(1)))
         val nodeArr = nodes.collect().map(_.getLong(0))
@@ -882,7 +833,7 @@ object Graph {
     * node with its component's MINIMUM member id (the exact contract of
     * the distributed settle) — nodes without surviving edges are their
     * own singleton components. Driver-local by design: callers bound
-    * the input to a broadcast-class constant first.
+    * the input through [[LocalEndgame]] first.
     */
   private def localTarjanMinLabel(nodes: Array[Long],
       edges: Array[(Long, Long)]): Map[Long, Long] = {

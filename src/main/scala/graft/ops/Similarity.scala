@@ -128,14 +128,21 @@ object Similarity {
   }
 
   /** One broadcast row holding the sorted (id, emb, norm) centroid array —
-    * the shared build for every vec_top_cells consumer.
+    * the shared build for every vec_top_cells consumer. Centroid ids must
+    * be distinct (the IVF first-shared-cell predicate relies on it): a
+    * duplicate fails the query. The check reads the collected array; a
+    * `count_distinct` would add a hash exchange (one job) per build.
     */
   private def centArray(centroids: DataFrame, cIdCol: String,
-                        cEmbCol: String): DataFrame =
+                        cEmbCol: String): DataFrame = {
+    val cents = col("_cents")
     centroids.agg(
       array_sort(collect_list(struct(
         col(cIdCol).cast("long").as("_cid"), col(cEmbCol).as("_cemb"),
         sqrt(dotFixed(cEmbCol, cEmbCol)).as("_cnrm")))).as("_cents"))
+      .select(when(size(array_distinct(transform(cents, _("_cid")))) === size(cents), cents)
+        .otherwise(raise_error(lit(s"IVF centroids: duplicate $cIdCol"))).as("_cents"))
+  }
 
   /** [[ivfAssign]] pre-explode: the corpus plus its full `_vcells`
     * assignment array (rank order). Keeping the array on the row lets a
@@ -166,17 +173,17 @@ object Similarity {
     // under replication the full `_vcells` array rides each index row so
     // the cell join can keep each (query, neighbor) pair exactly once by
     // predicate (below) — at replication 1 the array is pruned away and
-    // the plan is the classic one-cell-per-row index
-    val assigned0 = ivfAssignCells(corpus, centroids, idCol, embCol, cIdCol,
-      cEmbCol, replication)
-    val assigned = assigned0.withColumn("cluster", explode(col("_vcells")))
-      .select((if (replication > 1)
+    // the plan is the classic one-cell-per-row index. `queryIds` sees
+    // (id, emb, cluster) at every replication, as in ivfPqTopK.
+    val cells = ivfAssignCells(corpus, centroids, idCol, embCol, cIdCol,
+      cEmbCol, replication).withColumn("cluster", explode(col("_vcells")))
+    val assigned = cells.select((if (replication > 1)
           Seq(col(idCol), col(embCol), col("_vcells"), col("cluster"))
         else Seq(col(idCol), col(embCol), col("cluster"))): _*)
       .withColumn("_nrm", sqrt(dotFixed(embCol, embCol)))
-    val qBase0 = queryIds(assigned)
+    val qBase0 = queryIds(cells.select(col(idCol), col(embCol), col("cluster")))
       .select(col(idCol).as("q_id"), col(embCol).as("q_emb"),
-        col("_nrm").as("_qnrm"))
+        sqrt(dotFixed(embCol, embCol)).as("_qnrm"))
     // replication duplicates each corpus row once per assigned cell; the
     // query base must carry one row per query (payload columns are
     // identical across the duplicates, so the dedup is content-stable)
@@ -611,12 +618,12 @@ object Similarity {
                 rerank: Int = 0, dim: Int = 0, m: Int = 0): DataFrame = {
     val d = inferDim(corpus, embCol, dim)
     val mm = inferM(codebooks, m)
-    val assigned0 = ivfAssignCells(corpus, centroids, idCol, embCol, cIdCol,
-      cEmbCol, replication)
-    val assigned = assigned0.withColumn("cluster", explode(col("_vcells")))
+    val assigned = ivfAssignCells(corpus, centroids, idCol, embCol, cIdCol,
+      cEmbCol, replication).withColumn("cluster", explode(col("_vcells")))
     val codes = pqEncode(corpus, codebooks, idCol, embCol, d, mm)
     val sub = d / mm
-    val qBase0 = queryIds(assigned)
+    // `queryIds` sees (id, emb, cluster), as in ivfTopK
+    val qBase0 = queryIds(assigned.select(col(idCol), col(embCol), col("cluster")))
       .select(col(idCol).as("q_id"), col(embCol).as("q_emb"))
     val qBase = if (replication > 1) qBase0.dropDuplicates("q_id") else qBase0
     // probe selection through the same fused vec_top_cells kernel as

@@ -380,16 +380,11 @@ object SuffixArray {
           col("_id") === col("_bid") && col("pos") === col("_bpos"), "left")
         .select(col("_id"), col("pos"), col("_r").as("_r1"),
           coalesce(col("_r2"), lit(0L)).as("_r2"), col("_rem"))
-      val tR = System.nanoTime()
       val (next, sG, sPrev, sRn, unres) = rankRound(paired,
         Seq(col("_r1"), col("_r2"), col("_id"), col("pos")),
         Seq("_r1", "_r2"), nParts, s"sa_round_$round", Some("_r1"), h * 2)
       state.release() // consumed into the new round's checkpoint
       state = next
-      if (sys.env.contains("GRAFT_SA_DEBUG"))
-        System.err.println(f"[sa] round $round h=$h sumRank=$sG " +
-          f"prev=${sPrev.get} srn=$sRn unresolved=$unres " +
-          f"secs=${(System.nanoTime() - tR) / 1e9}%.2f")
       h *= 2
       // fixpoint (no split), every group singleton, every remaining
       // group an identical-suffix class, or refinement bound reached —

@@ -248,4 +248,39 @@ class AnnRecallSpec extends SparkSpec {
       s"pq/adc construction with constants ran ${jobs.length} driver job(s) — " +
         "a dim/m inference job leaked back in")
   }
+
+  test("queryIds sees the same columns from ivfTopK and ivfPqTopK at replication 1 and 2") {
+    val cents = emb.where(col("vec_id") < 8)
+      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
+    val cb = Similarity.pqTrainCodebooks(emb, "vec_id", "embedding",
+      m = 8, k = 16, iterations = 0, dim = 64)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Seq[String])]
+    def rec(entry: String, r: Int)(a: DataFrame): DataFrame = {
+      seen += ((entry, r, a.columns.toSeq))
+      a.where(col("vec_id") < 3)
+    }
+    for (r <- Seq(1, 2)) {
+      Similarity.ivfTopK(emb, rec("ivfTopK", r), "vec_id", "embedding",
+        cents, "c_id", "c_emb", K, nprobe = 2, replication = r)
+      Similarity.ivfPqTopK(emb, "vec_id", "embedding", cents, "c_id", "c_emb",
+        cb, rec("ivfPqTopK", r), K, nprobe = 2, replication = r, dim = 64, m = 8)
+    }
+    assert(seen.size === 4)
+    assert(seen.map(_._3).distinct === Seq(Seq("vec_id", "embedding", "cluster")),
+      seen.mkString("; "))
+  }
+
+  test("a duplicated centroid id fails the IVF query instead of duplicating pairs") {
+    val cents = emb.where(col("vec_id") < 8)
+      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
+    val dup = cents.unionAll(cents.where(col("c_id") === 3))
+    val top = Similarity.ivfTopK(emb, a => a.where(col("vec_id") < NQ),
+      "vec_id", "embedding", dup, "c_id", "c_emb", K, nprobe = 2)
+    val err = intercept[Exception](top.collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("duplicate c_id")), err)
+    // the distinct set still runs
+    assert(Similarity.ivfTopK(emb, a => a.where(col("vec_id") < NQ),
+      "vec_id", "embedding", cents, "c_id", "c_emb", K, nprobe = 2).count() > 0)
+  }
 }

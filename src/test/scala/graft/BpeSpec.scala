@@ -59,29 +59,25 @@ class BpeSpec extends SparkSpec {
   }
 
   test("learnMerges local endgame matches the distributed rounds") {
-    // the default path learns on the driver below the vocab bound;
-    // localRowBound = 0 forces the distributed rounds on the SAME corpus
-    // — covers argmax tie-breaks, greedy merge application, early stop
-    // and regex metacharacters (the graph-endgame twin law)
+    // the default path learns on the driver below the bound; withBound(0)
+    // forces the distributed rounds on the SAME corpus — covers argmax
+    // tie-breaks, greedy merge application, early stop and regex
+    // metacharacters (the graph-endgame twin law)
     val corpora = Seq(
       Seq(Seq.fill(5)("low"), Seq.fill(2)("lowest"),
         Seq.fill(6)("newer"), Seq.fill(3)("wider")).flatten.mkString(" "),
       (Seq.fill(5)("a.b") ++ Seq.fill(3)("$$x")).mkString(" "),
       "ab ab",
       Seq.fill(4)("a\\b").mkString(" "))
-    for ((corpus, ci) <- corpora.zipWithIndex) {
+    for (corpus <- corpora) {
       val df = Seq(corpus).toDF("text")
-      val loc = Bpe.learnMerges(df, "text", 6).collect().map(_.toSeq).toSeq
-      val dist = Bpe.learnMergesImpl(df, "text", 6, localRowBound = 0)
-        .collect().map(_.toSeq).toSeq
-      assert(loc === dist, s"corpus #$ci")
+      Endgame.agree("learnMerges")(
+        Bpe.learnMerges(df, "text", 6).collect().map(_.toSeq).toSeq)
     }
     // the real fixture corpus at 10 merges (the bpe_merges query shape)
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val loc = Bpe.learnMerges(docs, "text", 10).collect().map(_.toSeq).toSeq
-    val dist = Bpe.learnMergesImpl(docs, "text", 10, localRowBound = 0)
-      .collect().map(_.toSeq).toSeq
-    assert(loc === dist)
+    Endgame.agree("learnMerges")(
+      Bpe.learnMerges(docs, "text", 10).collect().map(_.toSeq).toSeq)
   }
 
   test("encode applies merges greedily and never crosses word boundaries") {

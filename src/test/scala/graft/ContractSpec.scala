@@ -152,4 +152,25 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
       .collect { case (p, n) if n > 1500 => s"$p ($n lines)" }.toSeq.sorted
     assert(long.isEmpty, s"main-source files over 1,500 lines: ${long.mkString(", ")}")
   }
+
+  // Every driver-local endgame decides through LocalEndgame against one
+  // byte bound: a per-op bound parameter or a hand-written blind
+  // `limit(n).collect()` anywhere else in ops/ is a second policy.
+  test("driver-local endgames decide only through LocalEndgame") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft/ops")
+    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
+    val param = """\blocal(?:Bound|Threshold|SolveLimit|RowBound)\s*:""".r
+    val blind = """\.limit\((?:[^()]|\([^()]*\))*\)\s*\.collect\(\)""".r
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "LocalEndgame.scala")
+      .flatMap { p =>
+        val src = Files.readString(p)
+        (param.findAllMatchIn(src) ++ blind.findAllMatchIn(src)).map(m =>
+          s"${p.getFileName}:${src.take(m.start).count(_ == '\n') + 1} ${m.matched}")
+      }.toSeq.sorted
+    assert(offenders.isEmpty, s"endgame logic outside LocalEndgame: ${offenders.mkString("; ")}")
+  }
 }

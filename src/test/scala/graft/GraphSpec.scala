@@ -2,7 +2,7 @@ package graft
 
 import scala.util.Random
 
-import graft.ops.Graph
+import graft.ops.{Graph, LocalEndgame}
 
 /** PageRank: analytic fixed points, mass conservation, and tolerance
   * equality with a naive in-memory reference on seeded random graphs
@@ -167,36 +167,55 @@ class GraphSpec extends SparkSpec {
     val rnd = new Random(11)
     val edges = (1 to 150).map(_ => (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
       .filter(e => e._1 != e._2)
-    // localBound = 0 forces the DISTRIBUTED rounds — this test pins
-    // their partitioning-independence, which the driver-local endgame
-    // would make trivially true
-    val a = Graph.labelPropagation(edges.toDF("s", "d").repartition(1), "s", "d", 8,
-        localBound = 0L)
-      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val b = Graph.labelPropagation(edges.toDF("s", "d").repartition(13), "s", "d", 8,
-        localBound = 0L)
-      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(a.sameElements(b))
+    // withBound(0) forces the DISTRIBUTED rounds — this test pins their
+    // partitioning-independence, which the driver-local endgame would
+    // make trivially true
+    LocalEndgame.withBound(0) {
+      val a = Graph.labelPropagation(edges.toDF("s", "d").repartition(1), "s", "d", 8)
+        .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1)))
+      val b = Graph.labelPropagation(edges.toDF("s", "d").repartition(13), "s", "d", 8)
+        .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(a.sameElements(b))
+    }
   }
+
+  private def pairsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.orderBy(df.columns.head).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
   test("local iteration endgame matches the distributed rounds (LPA + BFS)") {
     val rnd = new Random(23)
     val edges = (1 to 400).map(_ => (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
       .filter(e => e._1 != e._2)
-    val lpLocal = Graph.labelPropagation(edges.toDF("s", "d"), "s", "d", 5)
-      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val lpDist = Graph.labelPropagation(edges.toDF("s", "d"), "s", "d", 5,
-        localBound = 0L)
-      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(lpLocal === lpDist)
-    val srcs = Seq(1L, 7L).toDF("n")
-    val bLocal = Graph.bfsLevels(edges.toDF("s", "d"), "s", "d", srcs, "n",
-        maxLevels = 6)
-      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val bDist = Graph.bfsLevels(edges.toDF("s", "d"), "s", "d", srcs, "n",
-        maxLevels = 6, localBound = 0L)
-      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(bLocal === bDist)
+    Endgame.agree("labelPropagation")(
+      pairsOf(Graph.labelPropagation(edges.toDF("s", "d"), "s", "d", 5)))
+    Endgame.agree("bfsLevels")(pairsOf(Graph.bfsLevels(edges.toDF("s", "d"),
+      "s", "d", Seq(1L, 7L).toDF("n"), "n", maxLevels = 6)))
+  }
+
+  test("LPA: a fat-row star under the row cap but over the byte bound runs distributed") {
+    // hub 0 with 100 leaves: 101 adjacency rows, under the 125-row cap of a
+    // 3,000 B bound (24 B minimum per row), but the neighbor arrays bring
+    // the estimate to 4,024 B — the bytes, not the row count, decide
+    val star = (1L to 100L).map(i => (0L, i)).toDF("s", "d")
+    val (got, ds) = Endgame.traced(LocalEndgame.withBound(3000)(
+      pairsOf(Graph.labelPropagation(star, "s", "d", 3))))
+    assert(ds.map(d => (d.op, d.rows, d.bytes, d.path)) ===
+      Seq(("labelPropagation", "101", "4024", "distributed")))
+    assert(got === LocalEndgame.withBound(0)(
+      pairsOf(Graph.labelPropagation(star, "s", "d", 3))))
+  }
+
+  test("bfsLevels: an over-bound source set runs distributed even when the edges fit") {
+    // 10 edges (160 B) fit a 400 B bound; 100 sources (800 B) do not
+    val path = (0L until 10L).map(i => (i, i + 1)).toDF("s", "d")
+    val srcs = (0L until 100L).toDF("n")
+    val (got, ds) = Endgame.traced(LocalEndgame.withBound(400)(
+      pairsOf(Graph.bfsLevels(path, "s", "d", srcs, "n", maxLevels = 3))))
+    assert(ds.map(d => (d.op, d.path)) === Seq(
+      ("bfsLevels.edges", "local"), ("bfsLevels.sources", "distributed")))
+    assert(got === (0L until 100L).map(_ -> 0L))
+    assert(got === LocalEndgame.withBound(0)(
+      pairsOf(Graph.bfsLevels(path, "s", "d", srcs, "n", maxLevels = 3))))
   }
 
   // ------------------------------------------------------------- triangles
@@ -228,8 +247,9 @@ class GraphSpec extends SparkSpec {
     val edges = (1L to 30L).map(i => (i, i % 7 + 1)).toDF("s", "d")
     val pr = Graph.pageRank(edges, "s", "d", iterations = 3)
     pr.collect()
-    val lp = Graph.labelPropagation(edges, "s", "d", iterations = 3,
-      localBound = 0L) // distributed path is where round storage can leak
+    // the distributed path is where round storage can leak
+    val lp = LocalEndgame.withBound(0)(
+      Graph.labelPropagation(edges, "s", "d", iterations = 3))
     lp.collect()
     val tc = Graph.triangleCount(edges, "s", "d")
     tc.collect()
@@ -245,8 +265,8 @@ class GraphSpec extends SparkSpec {
     // plan depth per cut, or analysis time would dominate and this smoke
     // would crawl. Results must match the 3-round lazy path's semantics.
     val edges = (1L to 40L).map(i => (i, i % 9 + 1)).toDF("s", "d")
-    val lp10 = Graph.labelPropagation(edges, "s", "d", iterations = 10,
-      localBound = 0L)
+    val lp10 = LocalEndgame.withBound(0)(
+      Graph.labelPropagation(edges, "s", "d", iterations = 10))
     assert(lp10.count() === 40)
     val pr10 = Graph.pageRank(edges, "s", "d", iterations = 10)
     val mass = pr10.agg(org.apache.spark.sql.functions.sum("rank"))
@@ -257,12 +277,11 @@ class GraphSpec extends SparkSpec {
     // be identical
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L))
       .toDF("s", "d")
-    val lazyB = Graph.bfsLevels(path, "s", "d", Seq(1L).toDF("n"), "n", maxLevels = 4,
-        localBound = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val eagerB = Graph.bfsLevels(path, "s", "d", Seq(1L).toDF("n"), "n", maxLevels = 10,
-        localBound = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (lazyB, eagerB) = LocalEndgame.withBound(0)((
+      Graph.bfsLevels(path, "s", "d", Seq(1L).toDF("n"), "n", maxLevels = 4)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+      Graph.bfsLevels(path, "s", "d", Seq(1L).toDF("n"), "n", maxLevels = 10)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
     assert(lazyB === eagerB.filter(_._2 <= 4L))
   }
 
@@ -345,23 +364,21 @@ class GraphSpec extends SparkSpec {
 
   test("triangleCount local endgame matches the distributed path on seeded random graphs") {
     // the default path takes the driver-local census below the data
-    // bound; localBound = 0 forces the distributed wedge build on the
-    // SAME edges — the endgame soundness law (bfsLevels has the twin)
+    // bound; withBound(0) forces the distributed wedge build on the SAME
+    // edges — the endgame soundness law (bfsLevels has the twin)
     val rnd = new Random(13)
     for (trial <- 1 to 3) {
       val n = 15 + trial * 12
       val edges = (1 to n * 4).map(_ =>
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)).toDF("s", "d")
-      val loc = Graph.triangleCount(edges, "s", "d").collect().head
-      val dist = Graph.triangleCountImpl(edges, "s", "d",
-        neighborListWedges = None, localBound = 0L).collect().head
-      assert(loc.toSeq === dist.toSeq, s"trial=$trial")
+      val loc = Endgame.agree("triangleCount")(
+        Graph.triangleCount(edges, "s", "d").collect().head.toSeq)
       // both forced wedge builds (self-join, per-pivot neighbor list)
       // agree with the default dispatch on the same edges
       for (nl <- Seq(true, false)) {
         val forced = Graph.triangleCountImpl(edges, "s", "d",
           neighborListWedges = Some(nl)).collect().head
-        assert(forced.toSeq === loc.toSeq, s"trial=$trial neighborListWedges=$nl")
+        assert(forced.toSeq === loc, s"trial=$trial neighborListWedges=$nl")
       }
     }
   }
@@ -487,14 +504,15 @@ class GraphSpec extends SparkSpec {
 
   // ------------------------------------------------------------------- SCC
 
-  // localThreshold = 0 forces the pure distributed FW-BW path; the
-  // default exercises the local-Tarjan endgame (both paths must agree
-  // with the independent reference below)
-  private def sccRun(edges: Seq[(Long, Long)],
-      localThreshold: Long = 1L << 16): Map[Long, Long] =
-    Graph.stronglyConnectedComponents(edges.toDF("s", "d"), "s", "d",
-        localThreshold = localThreshold)
+  // both the local-Tarjan endgame and the pure distributed FW-BW path
+  // (forced by withBound(0)) must agree, and match the independent
+  // reference below
+  private def sccOnce(edges: Seq[(Long, Long)]): Map[Long, Long] =
+    Graph.stronglyConnectedComponents(edges.toDF("s", "d"), "s", "d")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def sccRun(edges: Seq[(Long, Long)]): Map[Long, Long] =
+    Endgame.agree("stronglyConnectedComponents")(sccOnce(edges))
 
   /** Iterative Tarjan (explicit stack — no JVM recursion limit). */
   private def sccRef(edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -551,8 +569,7 @@ class GraphSpec extends SparkSpec {
       (11L, 10L), (10L, 20L))
     val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
       11L -> 10L, 20L -> 20L)
-    assert(sccRun(edges) === expect)                      // endgame path
-    assert(sccRun(edges, localThreshold = 0) === expect)  // distributed path
+    assert(sccRun(edges) === expect)
   }
 
   test("SCC: a DAG is all singletons; a full cycle is one component") {
@@ -563,7 +580,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("SCC: self-loop-only / empty edge sets yield an empty typed result") {
-    assert(sccRun(Seq((1L, 1L), (2L, 2L))) === Map.empty)
+    assert(sccOnce(Seq((1L, 1L), (2L, 2L))) === Map.empty)
     val out = Graph.stronglyConnectedComponents(
       Seq.empty[(Long, Long)].toDF("s", "d"), "s", "d")
     assert(out.columns.toSeq === Seq("node", "scc_id") && out.count() === 0)
@@ -574,19 +591,20 @@ class GraphSpec extends SparkSpec {
     for ((n, m) <- Seq((12, 20), (20, 45), (30, 90))) {
       val edges = (1 to m).map(_ =>
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      assert(sccRun(edges) === sccRef(edges), s"n=$n m=$m (endgame)")
-      assert(sccRun(edges, localThreshold = 0) === sccRef(edges),
-        s"n=$n m=$m (distributed)")
+      assert(sccRun(edges) === sccRef(edges), s"n=$n m=$m")
     }
   }
 
   test("SCC hybrid: distributed descent hands a mid-sized remainder to the endgame") {
-    // threshold between the settled fringe and the full graph: the first
-    // outer round runs distributed, the shrunken remainder goes local —
-    // both halves must agree with the reference
+    // a bound between the settled fringe and the full graph (20 live
+    // nodes + edges at 16 B): the first outer round runs distributed, the
+    // shrunken remainder goes local — both halves must agree with the
+    // reference
     val rnd = new Random(47)
     val edges = (1 to 120).map(_ =>
       (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-    assert(sccRun(edges, localThreshold = 10) === sccRef(edges))
+    val (got, ds) = Endgame.traced(LocalEndgame.withBound(20 * 16)(sccOnce(edges)))
+    assert(got === sccRef(edges))
+    assert(ds.head.path === "distributed" && ds.last.path === "local", ds)
   }
 }

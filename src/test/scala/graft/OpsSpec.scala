@@ -319,15 +319,12 @@ class OpsSpec extends SparkSpec {
       val edges = Seq.fill(45)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(e => e._1 != e._2)
       val expected = unionFind(n, edges)
-      // both the local-endgame path (default limit) and the pure
-      // distributed fixpoint (limit 0, endgame disabled) must agree
-      val got = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === expected, s"seed=$seed: endgame path diverges from union-find")
-      val distributed = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b",
-          localSolveLimit = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(distributed === expected, s"seed=$seed: distributed fixpoint diverges")
+      // the local-endgame path (default bound) and the pure distributed
+      // fixpoint (withBound(0)) must agree, and match union-find
+      val got = Endgame.agree("connectedComponents")(
+        Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      assert(got === expected, s"seed=$seed: connectedComponents diverges from union-find")
     }
   }
 
