@@ -1,5 +1,10 @@
 package graft
 
+import java.util.UUID
+import java.util.concurrent.{ConcurrentLinkedQueue, FutureTask}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -48,7 +53,23 @@ object IngestJob {
     *  - agent path: Corporate/Event/Personal fragments → otherId
     *    extraction (P4) → disjunctive VIAF lookup-update (J2/K4).
     *
-    * Writes `$outDir/fast` and (when `viaf` is given) `$outDir/viaf`.
+    * The two writes run at once: `viaf` on a thread started for this call
+    * (so it inherits the caller's Spark local properties, such as the job
+    * group), `fast` on the caller's thread. The viaf path's one-task
+    * stages would otherwise leave the other cores idle. Both write into
+    * `$outDir/_staging-<uuid>/`; only when both succeed are they published
+    * to `$outDir/fast` and (when `viaf` is given) `$outDir/viaf` by
+    * [[Sinks.publish]]. If either write fails, this waits for the other,
+    * deletes the staging directory and rethrows the first failure with any
+    * second one suppressed; the previous tables stay as they were. The
+    * cached fragments are released only after both writes end.
+    *
+    * A `_staging-*` directory left by a killed run is deleted at the start
+    * of the next one; like [[Sinks.mergeInto]], this assumes one writer per
+    * `outDir`. The window that remains is the JVM dying between the
+    * publish renames: `outDir` can then hold one new table and one old
+    * one, or lack a table whose previous version sits in the staging
+    * directory until the next run sweeps it.
     */
   def runAll(spark: SparkSession, ntDir: String, outDir: String,
              viaf: Option[DataFrame]): RunReport = {
@@ -62,24 +83,51 @@ object IngestJob {
     }
     require(missing.isEmpty, s"missing FAST files in $ntDir: ${missing.mkString(", ")}")
 
+    val out = new Path(outDir)
+    val fs = out.getFileSystem(conf)
+    if (fs.exists(out))
+      fs.listStatus(out).filter(_.getPath.getName.startsWith(StagingPrefix))
+        .foreach(st => fs.delete(st.getPath, true))
+    val staging = new Path(out, StagingPrefix + UUID.randomUUID())
+
+    // failures in the order they happened, from either thread
+    val errors = new ConcurrentLinkedQueue[Throwable]
+    def attempt[A](write: => A): Option[A] =
+      try Some(write) catch { case e: Throwable => errors.add(e); None }
+
     val fragments = FastIngest
       .project(NtReader.triplesTagged(spark, RequiredFiles.map(f => s"$ntDir/$f"): _*))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val fastReport = Sinks.writeFast(FastIngest.termDocs(fragments), s"$outDir/fast")
-
-      // agent path — viafUpdate is lazy, so the sink write below is the
-      // ONLY materialization of the updated table (no pre-write checkpoint)
-      val viafRows = viaf.map { v =>
+      // agent path — viafUpdate is lazy, so the sink write is the ONLY
+      // materialization of the updated table (no pre-write checkpoint)
+      val viafWrite = viaf.map { v =>
         val agentFrags = fragments.where(col("doc_type").isin(AgentTypes: _*))
         val updated = FastIngest.viafUpdate(FastIngest.agentOtherIds(agentFrags), v)
-        Sinks.writeViaf(updated, s"$outDir/viaf").rows
-      }.getOrElse(0L)
-      RunReport(fastReport.rows, viafRows, fastReport.badRows, fastReport.missingPref)
+        val task = new FutureTask(() => attempt(Sinks.writeViaf(updated, s"$staging/viaf")))
+        val thread = new Thread(task, ViafThreadName)
+        thread.start()
+        (thread, task)
+      }
+      val fastReport = attempt(Sinks.writeFast(FastIngest.termDocs(fragments), s"$staging/fast"))
+      val viafReport = viafWrite.flatMap { case (thread, task) => thread.join(); task.get() }
+      errors.asScala.toList match {
+        case first :: rest => rest.foreach(first.addSuppressed); throw first
+        case Nil =>
+      }
+      Sinks.publish(spark, staging.toString, outDir, "fast" +: viafReport.map(_ => "viaf").toSeq)
+      val fast = fastReport.get
+      RunReport(fast.rows, viafReport.map(_.rows).getOrElse(0L), fast.badRows, fast.missingPref)
     } finally {
       fragments.unpersist()
+      fs.delete(staging, true)
     }
   }
+
+  private val StagingPrefix = "_staging-"
+
+  /** Name of the thread [[runAll]] starts for the viaf write. */
+  private[graft] val ViafThreadName = "IngestJob.runAll-viaf"
 
   def main(args: Array[String]): Unit = {
     if (args.length < 3 || args.length > 4 || args(0) != "all") {

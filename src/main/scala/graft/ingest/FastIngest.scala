@@ -82,17 +82,21 @@ object FastIngest {
   /** P7 — doc type from the source filename (`lib/ingest.js:201-210`):
     * substring match on the 8 FAST file names; the virtual TermEvent pass
     * maps to Event. Use with `input_file_name()` for multi-file reads.
+    * Only the last path segment is matched, so a directory named like a
+    * FAST file (`/data/FASTPersonal-2024/`) does not tag every file in it.
     */
-  def typeFromFilename(file: Column): Column =
-    when(file.contains("FASTCorporate"), "Corporate")
-      .when(file.contains("FASTTermEvent"), "Event")
-      .when(file.contains("FASTEvent"), "Event")
-      .when(file.contains("FASTPersonal"), "Personal")
-      .when(file.contains("FASTChronological"), "Chronological")
-      .when(file.contains("FASTGeographic"), "Geographic")
-      .when(file.contains("FASTTitle"), "Title")
-      .when(file.contains("FASTTopical"), "Topical")
-      .when(file.contains("FASTFormGenre"), "Form")
+  def typeFromFilename(file: Column): Column = {
+    val name = substring_index(file, "/", -1)
+    when(name.contains("FASTCorporate"), "Corporate")
+      .when(name.contains("FASTTermEvent"), "Event")
+      .when(name.contains("FASTEvent"), "Event")
+      .when(name.contains("FASTPersonal"), "Personal")
+      .when(name.contains("FASTChronological"), "Chronological")
+      .when(name.contains("FASTGeographic"), "Geographic")
+      .when(name.contains("FASTTitle"), "Title")
+      .when(name.contains("FASTTopical"), "Topical")
+      .when(name.contains("FASTFormGenre"), "Form")
+  }
 
   /** A1 — group fast fragments into one document per id.
     * `collect_set` gives bounded, de-duplicated partial-agg state; arrays are

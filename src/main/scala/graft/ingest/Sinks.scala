@@ -1,5 +1,8 @@
 package graft.ingest
 
+import java.io.IOException
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,8 +12,10 @@ import org.apache.spark.sql.functions._
   * The reference drops + re-creates its target collection, bulk-inserts in
   * batches of 100, and recovers from duplicate keys row-by-row. Here the
   * merge happens *before* the write (A4), so the sink is a plain
-  * overwrite-mode parquet write: batching, buffering, and atomicity are the
-  * writer's job; `_id` uniqueness holds by construction.
+  * overwrite-mode parquet write: batching and buffering are the writer's
+  * job; `_id` uniqueness holds by construction. A caller that must keep
+  * the previous table on failure writes to a staging path and then
+  * [[publish]]es it, as [[graft.IngestJob.runAll]] does.
   */
 object Sinks {
 
@@ -48,6 +53,39 @@ object Sinks {
 
   def readTable(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
+
+  /** Publish the tables written under `staging` to `outDir/<table>`, in
+    * order, by directory renames: the live table, if any, is moved to
+    * `staging/<table>.old`, then the staged one is renamed into place.
+    * Each rename goes to a name that does not exist, which is atomic on
+    * HDFS and POSIX. If a rename fails, the renames already done are
+    * undone in reverse, so `outDir` keeps the previous version of every
+    * table, and the error is rethrown (a failed undo is attached to it as
+    * suppressed). The caller deletes `staging`, which then holds the
+    * replaced tables.
+    */
+  def publish(spark: SparkSession, staging: String, outDir: String,
+              tables: Seq[String]): Unit = {
+    val stage = new Path(staging)
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def mv(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to)) throw new IOException(s"publish: rename $from -> $to failed")
+    var undo = List.empty[() => Unit]
+    try tables.foreach { t =>
+      val (live, staged) = (new Path(outDir, t), new Path(stage, t))
+      val old = new Path(stage, s"$t.old")
+      if (fs.exists(live)) {
+        mv(live, old)
+        undo ::= (() => mv(old, live))
+      }
+      mv(staged, live)
+      undo ::= (() => mv(live, staged))
+    } catch {
+      case e: Throwable =>
+        try undo.foreach(_()) catch { case u: Throwable => e.addSuppressed(u) }
+        throw e
+    }
+  }
 
   /** Bucketed + sorted managed table: joins between two tables bucketed on
     * the same key with the same bucket count run WITHOUT a shuffle on

@@ -169,6 +169,18 @@ class FastIngestSpec extends SparkSpec {
     assert(typ("/data/FASTTopical.nt") === "Topical")
   }
 
+  test("P7: only the file name decides the type, not its directory") {
+    def typ(f: String): String =
+      Seq(f).toDF("f").select(FastIngest.typeFromFilename($"f")).head.getString(0)
+    val dir = "file:///data/FASTPersonal-2024"
+    assert(typ(s"$dir/FASTChronological.nt") === "Chronological")
+    assert(typ(s"$dir/FASTFormGenre.nt") === "Form")
+    assert(typ(s"$dir/FASTGeographic.nt") === "Geographic")
+    assert(typ(s"$dir/FASTTopical.nt") === "Topical")
+    assert(typ(s"$dir/FASTPersonal.nt") === "Personal")
+    assert(typ("file:///data/FASTTopical/FASTCorporate.nt") === "Corporate")
+  }
+
   test("buildDocsTagged: per-file types survive to docs") {
     val frags = FastIngest.project(FastIngest.parse(
       Seq(

@@ -1,13 +1,38 @@
 package graft
 
+import java.io.IOException
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.mapreduce.JobContext
+import org.apache.spark.TestBus
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 
 import graft.ingest.{FastIngest, Sinks}
 import graft.sources.NtReader
 
+/** A commit protocol that fails the commit of every write to a path
+  * ending in `/fast`; set as `spark.sql.sources.commitProtocolClass` to
+  * make exactly the fast write of [[IngestJob.runAll]] fail.
+  */
+class FailFastCommit(jobId: String, path: String, dynamic: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamic) {
+  override def commitJob(job: JobContext, taskCommits: Seq[TaskCommitMessage]): Unit =
+    if (path.endsWith("/fast")) throw new IOException("injected fast commit failure")
+    else super.commitJob(job, taskCommits)
+}
+
 /** End-to-end job tests over real NT files on disk: term path (docs table)
   * and agent path (viaf update), one file at a time and as the full
-  * 7-file [[IngestJob.runAll]], plus its pre-flight validation.
+  * 7-file [[IngestJob.runAll]], plus its pre-flight validation, its
+  * all-or-nothing publish, its staging sweep and its job group.
   */
 class IngestJobSpec extends SparkSpec {
 
@@ -42,16 +67,18 @@ class IngestJobSpec extends SparkSpec {
     assert(v.getAs[Seq[Int]]("fast") === Seq(101))
   }
 
-  test("runAll: 7-file layout -> fast + viaf in one invocation (agent/term split)") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_job_all").toString
+  private val pref = "http://www.w3.org/2004/02/skos/core#prefLabel"
+  private val sameAs = "http://schema.org/sameAs"
+  private val rdfs = "http://www.w3.org/2000/01/rdf-schema#label"
 
-    def fastLine(id: Int, pred: String, obj: String) =
-      s"<http://id.worldcat.org/fast/$id> <$pred> $obj ."
-    val pref = "http://www.w3.org/2004/02/skos/core#prefLabel"
-    val sameAs = "http://schema.org/sameAs"
-    val rdfs = "http://www.w3.org/2000/01/rdf-schema#label"
+  private def fastLine(id: Int, pred: String, obj: String) =
+    s"<http://id.worldcat.org/fast/$id> <$pred> $obj ."
 
+  /** The 7-file FAST layout in a new temp directory: one term doc per term
+    * file, two Event docs (one an agent), and one agent per agent file.
+    */
+  private def layout(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toString
     // term files: one doc each; doc 1's LC link is labelled only in an
     // agent file (Corporate, below)
     Files.writeString(Paths.get(s"$dir/FASTTopical.nt"),
@@ -80,13 +107,52 @@ class IngestJobSpec extends SparkSpec {
     Files.writeString(Paths.get(s"$dir/FASTPersonal.nt"),
       fastLine(8, pref, "\"Person Eight\"") + "\n" +
       fastLine(8, sameAs, "<http://viaf.org/viaf/800>") + "\n")
+    dir
+  }
 
-    val viaf = Seq(
+  private def viafTable: DataFrame = {
+    import spark.implicits._
+    Seq(
       ("vA", "500", "lcX", null.asInstanceOf[Seq[Int]]), // matches event agent 5 via viaf
       ("vB", "999", "lc700", Seq(42)),                   // matches corporate 7 via lcId
       ("vC", "800", "lc800", null.asInstanceOf[Seq[Int]]), // matches personal 8 via viaf
       ("vD", "111", "lc111", Seq(9))                     // untouched
     ).toDF("_id", "viaf", "lcId", "fast")
+  }
+
+  /** A table's rows as sorted strings, to compare two reads. */
+  private def rowsOf(path: String): Seq[String] =
+    Sinks.readTable(spark, path).collect().map(_.toString).toSeq.sorted
+
+  /** What runAll must leave behind after any outcome: no staging
+    * directory, no persisted RDD beyond `rdds0`, no live thread of its own.
+    */
+  private def assertNothingLeft(out: String, rdds0: Int): Unit = {
+    val staging = Option(new java.io.File(out).list()).toSeq.flatten
+      .filter(_.startsWith("_staging-"))
+    assert(staging.isEmpty, s"staging left in $out")
+    assert(spark.sparkContext.getPersistentRDDs.size === rdds0,
+      s"runAll leaked persisted RDDs: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName == IngestJob.ViafThreadName && t.isAlive))
+  }
+
+  /** `viaf` read back from parquet, as the job reads it, with a task that
+    * fails when it reaches the row keyed `id`.
+    */
+  private def failingRow(viaf: DataFrame, id: String): DataFrame = {
+    val path = Files.createTempDirectory("graft_viaf_in").resolve("viaf").toString
+    viaf.write.parquet(path)
+    spark.read.parquet(path).withColumn("lcId",
+      when(col("_id") === id, raise_error(lit("viaf row failed"))).otherwise(col("lcId")))
+  }
+
+  private def messages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
+
+  test("runAll: 7-file layout -> fast + viaf in one invocation (agent/term split)") {
+    val dir = layout("graft_job_all")
+    val viaf = viafTable
 
     // Single-materialization sink path (round-8): the writes inside runAll
     // must be the ONLY materializations — no pre-write checkpoint (neither
@@ -105,8 +171,7 @@ class IngestJobSpec extends SparkSpec {
 
     assert(ckptEntries === ckpt0,
       "runAll wrote checkpoint files on the sink path — result must flow straight to the sink")
-    assert(spark.sparkContext.getPersistentRDDs.size === rdds0,
-      s"runAll leaked persisted RDDs: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
+    assertNothingLeft(s"$dir/out", rdds0)
     assert(spark.sharedState.cacheManager.isEmpty,
       "runAll leaked CacheManager entries past the sink write")
 
@@ -155,5 +220,119 @@ class IngestJobSpec extends SparkSpec {
     val report = IngestJob.runAll(spark, s"file://$dir", s"$dir/out", None)
     assert(report.fastRows === 1) // fast/1 from the term files; Personal is agent-only
     assert(Files.exists(Paths.get(s"$dir/out/fast")))
+  }
+
+  test("runAll: a failed viaf write publishes neither table and keeps the previous ones") {
+    val dir = layout("graft_job_viaf_fail")
+    val out = s"$dir/out"
+    IngestJob.runAll(spark, dir, out, Some(viafTable))
+    val (fast0, viaf0) = (rowsOf(s"$out/fast"), rowsOf(s"$out/viaf"))
+    GraftSession.releaseAll(spark)
+    val rdds0 = spark.sparkContext.getPersistentRDDs.size
+
+    // a changed input, so a published fast table would differ; one viaf
+    // row fails its task in the middle of the viaf write
+    Files.writeString(Paths.get(s"$dir/FASTGeographic.nt"),
+      fastLine(2, pref, "\"Geo Renamed\"") + "\n")
+    val err = intercept[Exception](IngestJob.runAll(spark, dir, out, Some(failingRow(viafTable, "vD"))))
+    assert(messages(err).exists(_.contains("viaf row failed")), err)
+
+    assert(rowsOf(s"$out/fast") === fast0)
+    assert(rowsOf(s"$out/viaf") === viaf0)
+    assertNothingLeft(out, rdds0)
+
+    // the same inputs without the failing row publish both tables
+    IngestJob.runAll(spark, dir, out, Some(viafTable))
+    assert(rowsOf(s"$out/fast") !== fast0)
+    assert(rowsOf(s"$out/viaf") === viaf0)
+    assertNothingLeft(out, rdds0)
+  }
+
+  test("runAll: a failed fast write publishes neither table; a second failure is suppressed") {
+    import spark.implicits._
+    val dir = layout("graft_job_fast_fail")
+    val out = s"$dir/out"
+    IngestJob.runAll(spark, dir, out, Some(viafTable))
+    val (fast0, viaf0) = (rowsOf(s"$out/fast"), rowsOf(s"$out/viaf"))
+    GraftSession.releaseAll(spark)
+    val rdds0 = spark.sparkContext.getPersistentRDDs.size
+
+    // a viaf table with one more row, so a published viaf would differ
+    val grown = viafTable.union(Seq(("vE", "222", "lc222", Seq(3))).toDF())
+    val key = "spark.sql.sources.commitProtocolClass"
+    spark.conf.set(key, classOf[FailFastCommit].getName)
+    try {
+      val err = intercept[Exception](IngestJob.runAll(spark, dir, out, Some(grown)))
+      assert(messages(err).exists(_.contains("injected fast commit failure")), err)
+      assert(rowsOf(s"$out/fast") === fast0)
+      assert(rowsOf(s"$out/viaf") === viaf0)
+      assertNothingLeft(out, rdds0)
+
+      // both writes fail: the first failure is thrown, the other is
+      // attached to it as suppressed
+      val both = intercept[Exception](IngestJob.runAll(spark, dir, out, Some(failingRow(grown, "vE"))))
+      val (thrown, suppressed) = (messages(both), both.getSuppressed.toSeq.flatMap(messages))
+      val (fastErr, viafErr) = ("injected fast commit failure", "viaf row failed")
+      assert(thrown.exists(_.contains(fastErr)) && suppressed.exists(_.contains(viafErr)) ||
+        thrown.exists(_.contains(viafErr)) && suppressed.exists(_.contains(fastErr)),
+        s"thrown $thrown, suppressed $suppressed")
+      assert(rowsOf(s"$out/fast") === fast0)
+      assert(rowsOf(s"$out/viaf") === viaf0)
+      assertNothingLeft(out, rdds0)
+    } finally spark.conf.unset(key)
+  }
+
+  test("runAll: a staging directory left by a killed run is swept, nothing else is touched") {
+    val dir = layout("graft_job_sweep")
+    val out = Paths.get(s"$dir/out")
+    val leftover = out.resolve("_staging-killed/fast/type=Topical")
+    Files.createDirectories(leftover)
+    Files.writeString(leftover.resolve("part-00000.parquet"), "partial")
+    val other = out.resolve("other")
+    Files.createDirectories(other)
+    Files.writeString(other.resolve("keep.txt"), "keep")
+    Files.writeString(out.resolve("README"), "notes")
+    val mtimes = Seq(other, other.resolve("keep.txt"), out.resolve("README"))
+      .map(p => p -> Files.getLastModifiedTime(p))
+
+    IngestJob.runAll(spark, dir, out.toString, None)
+
+    assert(Files.list(out).iterator().asScala.map(_.getFileName.toString).toSet ===
+      Set("fast", "other", "README"))
+    assert(Files.readString(other.resolve("keep.txt")) === "keep")
+    assert(Files.readString(out.resolve("README")) === "notes")
+    mtimes.foreach { case (p, t) => assert(Files.getLastModifiedTime(p) === t, p) }
+  }
+
+  test("runAll: the caller's job group tags every job of both writes") {
+    val dir = layout("graft_job_group")
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[(String, String)] // (job group, SQL execution id)
+    val writers = new ConcurrentHashMap[String, String]    // SQL execution id -> sink
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")) ->
+          String.valueOf(e.properties.getProperty("spark.sql.execution.id")))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          Seq("writeFast", "writeViaf").find(s.details.contains)
+            .foreach(w => writers.put(s.executionId.toString, w))
+        case _ =>
+      }
+    }
+    TestBus.drain(sc) // so the listener sees no earlier spec's events
+    sc.addSparkListener(listener)
+    sc.setJobGroup("graft-runall-group", "runAll job group spec")
+    try IngestJob.runAll(spark, dir, s"$dir/out", Some(viafTable))
+    finally {
+      sc.clearJobGroup()
+      TestBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val seen = jobs.asScala.toSeq
+    assert(seen.nonEmpty)
+    assert(seen.forall(_._1 == "graft-runall-group"), seen)
+    assert(seen.flatMap(j => Option(writers.get(j._2))).toSet === Set("writeFast", "writeViaf"),
+      s"jobs $seen, writers $writers")
   }
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.ingest.Sinks
 
-/** Sink behaviors: overwrite + observe metrics, and bucketed co-located
-  * joins (no shuffle between same-bucketed tables).
+/** Sink behaviors: overwrite + observe metrics, the staged publish, and
+  * bucketed co-located joins (no shuffle between same-bucketed tables).
   */
 class SinksSpec extends SparkSpec {
   import spark.implicits._
@@ -24,6 +24,34 @@ class SinksSpec extends SparkSpec {
     val back = Sinks.readTable(spark, s"$out/fast")
     assert(back.count() === 2)
     assert(back.select("type").distinct().count() === 2) // partition column survives
+  }
+
+  test("publish: a failed rename rolls back the tables already published") {
+    import java.nio.file.{Files, Path}
+    val out = Files.createTempDirectory("graft_publish").resolve("out")
+    val staging = out.resolve("_staging-test")
+    def put(dir: Path, text: String): Unit = {
+      Files.createDirectories(dir)
+      Files.writeString(dir.resolve("part-0"), text)
+    }
+    def read(dir: Path): String = Files.readString(dir.resolve("part-0"))
+    put(out.resolve("fast"), "old fast")
+    put(out.resolve("viaf"), "old viaf")
+    put(staging.resolve("fast"), "new fast")
+
+    // no staged viaf: its rename fails after fast was published
+    intercept[java.io.IOException] {
+      Sinks.publish(spark, staging.toString, out.toString, Seq("fast", "viaf"))
+    }
+    assert(read(out.resolve("fast")) === "old fast")
+    assert(read(out.resolve("viaf")) === "old viaf")
+    assert(read(staging.resolve("fast")) === "new fast")
+
+    put(staging.resolve("viaf"), "new viaf")
+    Sinks.publish(spark, staging.toString, out.toString, Seq("fast", "viaf"))
+    assert(read(out.resolve("fast")) === "new fast")
+    assert(read(out.resolve("viaf")) === "new viaf")
+    assert(read(staging.resolve("fast.old")) === "old fast")
   }
 
   test("mergeInto: upsert + delete, untouched buckets byte-identical, replay-idempotent") {
