@@ -503,7 +503,7 @@ object Graph {
 
   /** Edge-count bound above which the wedge build switches from the
     * self-join to the per-pivot neighbor-list aggregation. Measured (r12,
-    * NOTES.md) on the GraphSmoke hash-wired skewed graph: 1.6M edges —
+    * NOTES.md "Graph scale smoke") on its skewed graph: 1.6M edges —
     * self-join 5.5 s vs list 6.0 s (broadcast-friendly sizes, the join is
     * free); 16M edges — self-join 27.2 s vs list 18.0 s (the join
     * re-ships the oriented set; the list build pays one src-keyed

@@ -35,8 +35,8 @@ object LocalEndgame {
   val RowOverhead: Long = 16L
 
   /** 24 MB = 3M 8-byte entries: keeps graph_bfs's 1.2M raw sf0.1 edges
-    * local (16 MB ran them distributed, 2.3× slower) and GraphSmoke's
-    * 1.6M-edge fixture distributed, as the smokes intend. */
+    * local (16 MB ran them distributed, 2.3× slower) and the 1.6M-edge
+    * hash-wired graph of NOTES.md's "Graph scale smoke" distributed. */
   private val bound = new DynamicVariable[Long](24L << 20)
 
   /** Runs `body` under a bound of `bytes`; `withBound(0)` forces every

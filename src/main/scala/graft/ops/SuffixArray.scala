@@ -314,7 +314,8 @@ object SuffixArray {
     * cap-length key buys only log₂(cap/BoundSeed) fewer rounds, but
     * each avoided round is a narrow 5-long-column exchange while the
     * seed key fattens the whole corpus exchange by cap tokens/suffix.
-    * Measured (SaScaleSmoke, 5M suffixes, 2100-token planted repeats):
+    * Measured (NOTES.md "SA scale smoke", now ScaleCurveSmoke's
+    * suffix_array_doubling row: 5M suffixes, 2100-token planted repeats):
     * seed 256 = 56.9 s, 64 = 38.6 s, 32 = 37.9 s, 16 = 42.2 s — flat
     * optimum around 32-64; 64 keeps one more round off skew-prone
     * corpora.

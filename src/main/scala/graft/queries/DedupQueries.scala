@@ -885,7 +885,8 @@ object DedupQueries {
       // artifact the previous run wrote) — staged once per (sfDir,
       // fingerprint) like the media corpora, so the timed path is what a
       // daily append actually pays: state scan + batch gram merge +
-      // rebuild. SaScaleSmoke stages it bucketed-by-gram for volume.
+      // rebuild. ScaleCurveSmoke's suffix_array_doubling row stages it
+      // bucketed-by-gram for volume.
       val staged = s"${System.getProperty("java.io.tmpdir")}/graft_spanstate_" +
         dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
         stagingFingerprint(dir, "documents.parquet")

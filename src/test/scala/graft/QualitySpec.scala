@@ -116,6 +116,12 @@ class QualitySpec extends SparkSpec {
     one.foreach { case (id, bp) => assert(two(id) === bp, s"doc $id moved") }
     // and the boilerplate docs are the flagged ones
     assert(one.filter(_._2 === 10000L).keySet === (1 to 40).filter(_ % 4 == 0).map(_.toLong).toSet)
+    // the absolute gate saturates: every doc with grams in a copied
+    // corpus shares them all with its twin, so it reads 10000 bp and goes
+    val abs = Quality.dupGramFraction(doubled, "text", "doc_id")
+    assert(abs.where(col("n_grams") > 0).count() === 80L)
+    assert(abs.where(col("n_grams") > 0 &&
+      (col("dup_frac_bp") =!= 10000 || col("keep") =!= 0)).count() === 0L)
   }
 
   test("dropBoilerplate removes only corpus-frequent segments, preserves order") {
