@@ -46,10 +46,12 @@ object IngestJob {
     *    the filename (P7); the Event file feeds BOTH paths from the same
     *    cached fragments — the virtual `FASTTermEvent` pass
     *    (`lib/ingest.js:197,298-303`) without a second read;
-    *  - term path: [[FastIngest.termDocs]] — term-file + Event fragments →
-    *    grouped docs (cross-file duplicate ids merge, type = max over
-    *    contributing files), P6 skipViaf filter, enrichment from all
-    *    files' external rdfs:label rows;
+    *  - term path: [[FastIngest.termDocs]] — term-file + Event fragments
+    *    probe all files' external rdfs:label rows (broadcast) for their
+    *    sameAs links, then ONE shuffle groups them into docs (cross-file
+    *    duplicate ids merge, type = max over contributing files, matched
+    *    labels merge into altLabel/normalized), then the P6 skipViaf
+    *    filter;
     *  - agent path: Corporate/Event/Personal fragments → otherId
     *    extraction (P4) → disjunctive VIAF lookup-update (J2/K4).
     *

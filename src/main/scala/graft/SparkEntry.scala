@@ -19,7 +19,7 @@ import graft.queries.QueryHelpers.{ntFromPart, t}
 object SparkEntry {
 
   /** Flagship: the reference's whole term-ingest dataflow (parse → project →
-    * group → enrich) over an NT corpus generated from `part` at sf0.001.
+    * label probe → group) over an NT corpus generated from `part` at sf0.001.
     */
   def entry(spark: SparkSession): DataFrame = {
     val (lines, docType) = (

@@ -10,7 +10,7 @@ import graft.functions.Nt
   * declarative Spark pipeline:
   *
   *   NT lines → parse (P1) → project/filter (P2/P3) →
-  *     ├─ term path: group by id (A1) + sameAs-label enrichment join (J1)
+  *     ├─ term path: sameAs-label probe per fragment (J1) + group by id (A1)
   *     │             → merged docs (A4/K3 semantics) → overwrite sink (K1/K2)
   *     └─ agent path: otherId extraction (P4) → disjunctive lookup join (J2)
   *                    → array-union viaf update (K4)
@@ -23,9 +23,10 @@ import graft.functions.Nt
   *   - all array columns are sorted sets (`lib/ingest.js:247` allows altLabel
   *     duplicates; we de-duplicate everywhere `normalized` already did).
   *
-  * All stages are narrow projections until the single `groupBy(id)` shuffle;
-  * the enrichment join broadcasts the (small) external-label side. At 100 TB
-  * the only wide ops are the two groupBys and the join — AQE handles skew,
+  * All stages are narrow until the single `groupBy(id)` shuffle: the
+  * enrichment probe is a map-side broadcast join of each fragment against
+  * the (small) external-label rows, so the term path's only wide op is that
+  * one groupBy (the agent path has its own, on otherId). AQE handles skew,
   * partial aggregation bounds map-side state, and per-group arrays are
   * de-duplicated at partial-agg time via collect_set.
   */
@@ -138,7 +139,10 @@ object FastIngest {
         $"altLabel", $"sameAsLc", $"sameAsViaf", $"normalized")
   }
 
-  /** A2 — external-URI → labels lookup table from sameAsLabel fragments. */
+  /** A2 — external-URI → labels lookup table from sameAsLabel fragments.
+    * With [[enrich]], the doc-level reference for [[termDocs]]' per-fragment
+    * probe.
+    */
   def sameAsLabels(fragments: DataFrame): DataFrame =
     fragments
       .where($"kind" === "sameAsLabel")
@@ -147,13 +151,16 @@ object FastIngest {
         sort_array(collect_set($"label")).as("extLabels"),
         sort_array(collect_set($"normalized")).as("extNormalized"))
 
-  /** J1 — enrich docs with labels of their sameAs URIs
-    * (`lib/ingest.js:264-295`): explode the doc arrays, join the label
+  /** J1 at doc level — enrich grouped docs with the labels of their sameAs
+    * URIs (`lib/ingest.js:264-295`): explode the doc arrays, join the label
     * table, regroup the matched labels per id and union them into the doc.
-    * Only full-URI elements can match — the bare-id segments never join
-    * (label table is keyed by full subject URI), which preserves the
-    * reference's observable behavior.
-    * The label side is small relative to the docs side → broadcast.
+    * Every array element is probed, the full URI and its trailing segment
+    * alike (SURVEY.md J1), so a label whose subject is a bare segment joins
+    * too. The label side is small relative to the docs side → broadcast.
+    *
+    * The doc-level reference for [[termDocs]], which probes per fragment
+    * before its one groupBy, so it needs neither a second aggregate nor a
+    * join back to the docs.
     */
   def enrich(docs: DataFrame, labels: DataFrame): DataFrame = {
     val matches = docs
@@ -180,22 +187,41 @@ object FastIngest {
   private val TermTypes = Seq("Chronological", "Form", "Geographic", "Topical", "Event")
 
   /** Term path: `doc_type`-tagged fragments (see [[typeFromFilename]]) →
-    * enriched docs. Term-type fragments are grouped (A1); the P6 skipViaf
-    * filter then drops Event docs that carry a sameAsViaf link (those ids
-    * are consumed as agents) and keeps VIAF-less events as ordinary
-    * `Event` docs; enrichment labels come from ALL fragments' external
-    * rdfs:label rows, agent files included.
+    * enriched docs, with one shuffle. Enrichment labels come from ALL
+    * fragments' external rdfs:label rows, agent files included; they are
+    * broadcast as plain (subject, label, normalized) rows, ungrouped.
+    * Each term-type fragment with a sameAs link probes them map-side for
+    * the keys [[enrich]] probes per doc — its URI and the URI's trailing
+    * segment — in one left-outer broadcast join. A fragment is one triple,
+    * so a sameAs fragment carries no altLabel or normalized value of its
+    * own: a matched label takes the fragment's `altLabel` slot and its
+    * normalized form the `normalized` slot, and the `collect_set`s of the
+    * one groupBy (A1) merge them into the doc. The P6 skipViaf filter then
+    * drops Event docs that carry a sameAsViaf link (those ids are consumed
+    * as agents) and keeps VIAF-less events as ordinary `Event` docs.
+    * Equal to `enrich(buildDocsTagged(term fragments) + P6,
+    * sameAsLabels(fragments))` (FastIngestSpec checks it on random corpora).
     *
-    * `fragments` feeds two branches (docs, label table); the caller
+    * `fragments` feeds two branches (probe side, label side); the caller
     * decides whether to persist or materialize it — this op stores
     * nothing and stays LAZY, so the caller's sink write is the only
     * materialization of the result.
     */
   def termDocs(fragments: DataFrame): DataFrame = {
-    val termFrags = fragments.where($"doc_type".isin(TermTypes: _*))
-    val docs = buildDocsTagged(termFrags)
+    val labels = fragments
+      .where($"kind" === "sameAsLabel")
+      .select($"subject".as("_extUri"), $"label".as("_extLabel"),
+        $"normalized".as("_extNorm"))
+    // one URI per fragment: a URI matching both hosts fills both columns
+    val uri = coalesce($"sameAsLc", $"sameAsViaf")
+    val probed = fragments
+      .where($"doc_type".isin(TermTypes: _*) && $"kind" === "fast")
+      .withColumn("_key", explode_outer(when(uri.isNotNull, array(uri, Nt.lastSegment(uri)))))
+      .join(broadcast(labels), $"_key" === $"_extUri", "left_outer")
+      .withColumn("altLabel", coalesce($"altLabel", $"_extLabel"))
+      .withColumn("normalized", coalesce($"normalized", $"_extNorm"))
+    buildDocsTagged(probed)
       .where(!($"type" === "Event" && size($"sameAsViaf") > 0)) // P6 skipViaf
-    enrich(docs, sameAsLabels(fragments))
   }
 
   /** P4 — agent records: otherId = trailing segment of the sameAs link, LC

@@ -220,11 +220,15 @@ object Sinks {
     // stage the batch as a fresh version dir; the materializing action
     // also completes the present-bucket observation (an emptied bucket —
     // every stored row deleted, no upsert hashed there — is absent from
-    // `present` and simply gets no manifest entry)
+    // `present` and simply gets no manifest entry). One shuffle on the
+    // bucket, as in StreamingIngest.mergeBatch: each task then holds whole
+    // buckets, so each bucket directory of the version gets one file, not
+    // one per input partition.
     val version = "data/v-" + java.util.UUID.randomUUID().toString
     val presentObs = Observation()
-    val m = graft.ops.Iterate.materialize(
-      merged.observe(presentObs, collect_set(col("_bucket")).as("bs")))
+    val tasks = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, numBuckets)
+    val m = graft.ops.Iterate.materialize(merged.repartition(tasks, col("_bucket"))
+      .observe(presentObs, collect_set(col("_bucket")).as("bs")))
     try {
       m.df.write.mode("overwrite").partitionBy("_bucket")
         .parquet(new org.apache.hadoop.fs.Path(root, version).toString)

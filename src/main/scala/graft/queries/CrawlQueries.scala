@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.Urls
 import graft.sources.WarcReader
 
-import QueryHelpers.{stagingFingerprint, t, widen}
+import QueryHelpers.{scratchDir, stagingFingerprint, t, widen}
 
 /** Crawl: WARC/WET sources, charset sniffing, HTML and PDF extraction, URL
   * canonicalization, robots rules and the crawl frontier.
@@ -61,8 +61,7 @@ object CrawlQueries {
         .select(col("doc_id").cast("long"), col("text"))
         .orderBy("doc_id").collect()
         .map(r => (r.getLong(0), r.getString(1)))
-      val tmp = java.nio.file.Files.createTempDirectory(
-        stagedPath.getParent, ".warc_staging")
+      val tmp = scratchDir(".warc_staging", stagedPath.getParent)
       (0 until 8).foreach { shard =>
         val recs = Seq(WarcReader.WriteRec("warcinfo", "",
           "2026-01-01T00:00:00Z", 0, "",

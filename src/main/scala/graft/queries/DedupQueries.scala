@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Similarity}
 
 import QueryHelpers.{duckCosine, inList, minhashSigCte, minhashSigCteFrom, normSql,
-  stagingFingerprint, stopEn, t, widen}
+  scratchDir, stagingFingerprint, stopEn, t, widen}
 
 /** Deduplication: exact, minhash/LSH, simhash, n-gram, span, suffix-array,
   * winnowing, incremental and retract variants, and decontamination.
@@ -447,8 +447,7 @@ object DedupQueries {
       val docs = t(s, dir, "documents").select("doc_id", "text")
       // fresh store + checkpoint per run: the replay WRITES, and a stale
       // signature store would duplicate every cross-batch pair
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_stream_dedup").toString
+      val base = scratchDir("graft_stream_dedup").toString
       docs.repartition(8).write.mode("overwrite").parquet(s"$base/in")
       val src = s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 2).parquet(s"$base/in")

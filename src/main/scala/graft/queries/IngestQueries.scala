@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.IntegerType
 
 import graft.ingest.FastIngest
 
-import QueryHelpers.{normSql, ntFromPart, stagingFingerprint, t, widen}
+import QueryHelpers.{normSql, ntFromPart, scratchDir, stagingFingerprint, t, widen}
 
 /** The paper's job as graded queries: N-Triples parse and quarantine, the FAST
   * term documents, the VIAF update, the merge of conflicting documents, the
@@ -243,7 +243,7 @@ object IngestQueries {
       val docs = t(s, dir, "documents")
       // run-unique dir: concurrent JVMs on the same sfDir must not race
       // on one overwrite-mode path
-      val path = java.nio.file.Files.createTempDirectory("graft_jsonl_").toString
+      val path = scratchDir("graft_jsonl_").toString
       graft.sources.TextTables.writeJsonl(docs, path)
       graft.sources.TextTables.readJsonl(s, docs.schema, path)
         .orderBy("doc_id")
@@ -255,7 +255,7 @@ object IngestQueries {
     // sides; nullValue sentinel distinguishes null from empty string).
     Query("source_csv", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val path = java.nio.file.Files.createTempDirectory("graft_csv_").toString
+      val path = scratchDir("graft_csv_").toString
       graft.sources.TextTables.writeCsv(docs, path)
       graft.sources.TextTables.readCsv(s, docs.schema, path)
         .orderBy("doc_id")
@@ -270,7 +270,7 @@ object IngestQueries {
     // PushdownSpec asserts the pruned plan; the oracle checks the rows.
     Query("source_partition_prune", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val path = java.nio.file.Files.createTempDirectory("graft_part_").toString
+      val path = scratchDir("graft_part_").toString
       docs.write.mode("overwrite").partitionBy("lang").parquet(path)
       s.read.parquet(path).where(col("lang") === "en")
         .select("doc_id", "text", "lang", "source", "n_chars")
@@ -283,7 +283,7 @@ object IngestQueries {
     // schema + FAILFAST on read — same contract as the other text sources.
     Query("source_xml", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val path = java.nio.file.Files.createTempDirectory("graft_xml_").toString
+      val path = scratchDir("graft_xml_").toString
       graft.sources.TextTables.writeXml(docs, path)
       graft.sources.TextTables.readXml(s, docs.schema, path)
         .orderBy("doc_id")
@@ -296,7 +296,7 @@ object IngestQueries {
     // 100 TB table add columns without rewriting history.
     Query("source_evolution", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val path = java.nio.file.Files.createTempDirectory("graft_evo_").toString
+      val path = scratchDir("graft_evo_").toString
       docs.where(col("doc_id") % 2 === 0)
         .select("doc_id", "text", "source", "n_chars") // v1: pre-`lang` era
         .write.mode("overwrite").parquet(s"$path/v1")
@@ -316,7 +316,7 @@ object IngestQueries {
     // same columnar guarantees, different container.
     Query("source_orc", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val path = java.nio.file.Files.createTempDirectory("graft_orc_").toString
+      val path = scratchDir("graft_orc_").toString
       docs.write.mode("overwrite").orc(path)
       s.read.schema(docs.schema).orc(path)
         .orderBy("doc_id")
@@ -332,7 +332,7 @@ object IngestQueries {
     // byte length, and content md5 (the oracle rebuilds all three
     // relationally — UTF-8 ASCII, so string length == byte length).
     Query("source_binary", (s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_binsrc_")
+      val tmp = scratchDir("graft_binsrc_")
       (0 until 25).foreach { i =>
         java.nio.file.Files.write(tmp.resolve(f"f$i%02d.bin"),
           s"file-$i:payload-${i * i}".getBytes("UTF-8"))
@@ -358,7 +358,7 @@ object IngestQueries {
     Query("source_fixed_width", (s, dir) => {
       import graft.sources.TextTables
       import graft.sources.TextTables.FixedCol
-      val tmp = java.nio.file.Files.createTempDirectory("graft_fw_")
+      val tmp = scratchDir("graft_fw_")
       val lines = (0 until 40).map { i =>
         val id = i.toString.padTo(6, ' ')
         val name = s"item-$i".padTo(12, ' ')
@@ -382,7 +382,7 @@ object IngestQueries {
     // layout answer is many moderate shards (the standard WET/WARC
     // convention), never one giant archive.
     Query("source_gzip", (s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_gz_")
+      val tmp = scratchDir("graft_gz_")
       val out = new java.util.zip.GZIPOutputStream(
         java.nio.file.Files.newOutputStream(tmp.resolve("part.txt.gz")))
       out.write((0 until 60).map(i => s"line-$i:${i * i}")
@@ -415,8 +415,7 @@ object IngestQueries {
         java.nio.file.Files.createDirectories(zipPath.getParent)
         val lines = DemoCorpus.ntFromPart(t(s, dir, "part"))
           .orderBy("line").collect().map(_.getString(0))
-        val tmp = java.nio.file.Files.createTempFile(
-          zipPath.getParent, ".staging", ".zip")
+        val tmp = scratchDir(".staging", zipPath.getParent).resolve(zipPath.getFileName)
         val zout = new java.util.zip.ZipOutputStream(
           java.nio.file.Files.newOutputStream(tmp),
           java.nio.charset.StandardCharsets.UTF_8)
@@ -487,7 +486,7 @@ object IngestQueries {
     // was spec-only. Values are integer-derived (custkey), so the compare
     // is exact cross-engine.
     Query("sink_merge_into", (s, dir) => {
-      val path = java.nio.file.Files.createTempDirectory("graft_sink_merge")
+      val path = scratchDir("graft_sink_merge")
         .toString + "/t"
       val o = t(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey"))

@@ -41,6 +41,21 @@ private[graft] object QueryHelpers {
 
   def ntFromPart(part: DataFrame): DataFrame = DemoCorpus.ntFromPart(part)
 
+  /** A fresh directory `<parent>/<prefix><random>` for a query's own files,
+    * deleted with its contents when the JVM exits (the shutdown hook
+    * [[GraftSession.local]] uses for its checkpoint directory), so repeated
+    * Verify and Bench runs do not fill the temp dir. A directory the query
+    * moves elsewhere before exit is not followed. The only temp-path call
+    * under `graft/queries/` (ContractSpec).
+    */
+  def scratchDir(prefix: String,
+                 parent: java.nio.file.Path = java.nio.file.Paths.get(
+                   System.getProperty("java.io.tmpdir"))): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(parent, prefix)
+    sys.addShutdownHook(new scala.reflect.io.Directory(dir.toFile).deleteRecursively())
+    dir
+  }
+
   /** Fingerprint of a source table's files (name, size, mtime — no Spark
     * job) for fixture-staging keys: a regenerated table, or two checkouts
     * sharing one tmpdir, can never silently replay stale staging (the

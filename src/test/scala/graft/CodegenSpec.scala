@@ -61,9 +61,7 @@ class CodegenSpec extends SparkSpec {
   }
 
   test("FastIngest.project compiles to methods small enough for HotSpot to JIT") {
-    // HotSpot leaves a method over 8,000 bytes of bytecode to the
-    // interpreter (DontCompileHugeMethods): a projection stage past that
-    // runs every triple interpreted
+    // a projection stage past the JIT limit runs every triple interpreted
     val dir = java.nio.file.Files.createTempDirectory("codegen-size")
     val file = dir.resolve("FASTTopical.nt")
     java.nio.file.Files.write(file, java.util.Arrays.asList(
@@ -72,16 +70,45 @@ class CodegenSpec extends SparkSpec {
       "<http://id.loc.gov/x> <http://www.w3.org/2000/01/rdf-schema#label> \"Ext\" ."))
     val df = graft.ingest.FastIngest.project(
       graft.sources.NtReader.triplesTagged(spark, file.toString))
-    val stages = df.queryExecution.executedPlan.collect {
+    assertJitSized(df.queryExecution.executedPlan)
+    assert(df.count() === 3)
+  }
+
+  test("FastIngest.termDocs compiles to methods small enough for HotSpot to JIT") {
+    // the fused stage probes the labels and partially aggregates once per
+    // fragment; the projection it follows once ran interpreted this way
+    val dir = java.nio.file.Files.createTempDirectory("codegen-size")
+    val file = dir.resolve("FASTTopical.nt")
+    java.nio.file.Files.write(file, java.util.Arrays.asList(
+      "<http://id.worldcat.org/fast/1> <http://www.w3.org/2004/02/skos/core#prefLabel> \"Jazz\"@en .",
+      "<http://id.worldcat.org/fast/1> <http://schema.org/sameAs> <http://viaf.org/viaf/1> .",
+      "<http://viaf.org/viaf/1> <http://www.w3.org/2000/01/rdf-schema#label> \"Ext\" ."))
+    val frags = graft.ingest.FastIngest.project(
+      graft.sources.NtReader.triplesTagged(spark, file.toString))
+      .persist() // as IngestJob.runAll holds its fragments
+    try {
+      val docs = graft.ingest.FastIngest.termDocs(frags)
+      assert(docs.collect().map(_.getSeq[String](4)).toSeq === Seq(Seq("Ext")))
+      // read after the run: AQE compiles its query stages as they run
+      assertJitSized(docs.queryExecution.executedPlan)
+    } finally frags.unpersist()
+  }
+
+  /** HotSpot leaves a method over 8,000 bytes of bytecode to the
+    * interpreter (DontCompileHugeMethods): every whole-stage-codegen
+    * subtree of `plan`, inside AQE query stages too, must stay under it.
+    */
+  private def assertJitSized(plan: org.apache.spark.sql.execution.SparkPlan): Unit = {
+    object walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val stages = walk.collect(plan) {
       case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
     }
-    assert(stages.nonEmpty)
+    assert(stages.nonEmpty, s"no whole-stage codegen in\n$plan")
     stages.foreach { w =>
       val size = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
         .compile(w.doCodeGen()._2)._2.maxMethodCodeSize
       assert(size <= 8000, s"largest generated method is $size bytes in\n${w.treeString}")
     }
-    assert(df.count() === 3)
   }
 
   test("vec_dot_d is exact past the float mantissa (the centroid case)") {

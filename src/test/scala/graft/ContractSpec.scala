@@ -173,4 +173,27 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
       }.toSeq.sorted
     assert(offenders.isEmpty, s"endgame logic outside LocalEndgame: ${offenders.mkString("; ")}")
   }
+
+  // A query's temp directory outlives the run unless something deletes
+  // it: every one goes through QueryHelpers.scratchDir, which does at
+  // JVM exit.
+  test("queries make temp paths only through QueryHelpers.scratchDir") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft/queries")
+    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
+    val temp = """\bcreateTemp(?:Directory|File)\b""".r
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = Files.readString(p)
+        val helper = """(?s)def scratchDir\(.*?\n  }\n""".r.findFirstMatchIn(src)
+          .filter(_ => p.getFileName.toString == "QueryHelpers.scala")
+        temp.findAllMatchIn(src)
+          .filterNot(m => helper.exists(h => h.start <= m.start && m.end <= h.end))
+          .map(m => s"${p.getFileName}:${src.take(m.start).count(_ == '\n') + 1}")
+      }.toSeq.sorted
+    assert(offenders.isEmpty,
+      s"temp paths made outside QueryHelpers.scratchDir: ${offenders.mkString(", ")}")
+  }
 }

@@ -57,15 +57,76 @@ class FastIngestSpec extends SparkSpec {
       === Seq("http://id.loc.gov/authorities/names/no99", "no99"))
   }
 
-  test("enrichment: external label joins in via full URI, not bare segment") {
+  test("enrichment: every sameAs element is probed, full URI and bare segment") {
     val d = docs(Seq(
       fastLine(5, pref, "\"Subject\""),
       fastLine(5, same, "<http://viaf.org/viaf/77>"),
       "<http://viaf.org/viaf/77> <" + lbl + "> \"External Name\" .",
-      // label keyed by a bare id never matches (reference quirk preserved):
+      // keyed by the trailing segment of doc 5's link: `sameAsViaf` holds
+      // "77" too, and every array element is probed (SURVEY.md J1)
+      "<77> <" + lbl + "> \"Segment Name\" .",
+      // a segment no doc links to
       "<88> <" + lbl + "> \"Unreachable\" ."))
-    assert(d(5).getAs[Seq[String]]("altLabel") === Seq("External Name"))
-    assert(d(5).getAs[Seq[String]]("normalized") === Seq("external name", "subject"))
+    assert(d(5).getAs[Seq[String]]("altLabel") === Seq("External Name", "Segment Name"))
+    assert(d(5).getAs[Seq[String]]("normalized")
+      === Seq("external name", "segment name", "subject"))
+  }
+
+  test("termDocs equals the doc-level group, P6 filter and enrich on random corpora") {
+    // the fused per-fragment probe against the reference it replaced:
+    // group the term fragments, drop VIAF-linked Events, then enrich the
+    // docs from the grouped label table of all files
+    val termTypes = Seq("Chronological", "Event", "Form", "Geographic", "Topical")
+    val files = termTypes ++ Seq("Corporate", "Personal")
+    def reference(frags: org.apache.spark.sql.DataFrame) = FastIngest.enrich(
+      FastIngest.buildDocsTagged(frags.where($"doc_type".isin(termTypes: _*)))
+        .where(!($"type" === "Event" && size($"sameAsViaf") > 0)),
+      FastIngest.sameAsLabels(frags))
+    def byId(df: org.apache.spark.sql.DataFrame): Map[Int, Seq[Any]] =
+      df.collect().map(r => r.getAs[Int]("_id") -> r.toSeq).toMap
+    val rnd = new scala.util.Random(7)
+    var enriched, fromAgents, droppedEvents, nullLabels, bothHosts = 0
+    (1 to 8).foreach { round =>
+      def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+      val uris = (1 to 6).flatMap(n => Seq(s"http://viaf.org/viaf/$n",
+        s"http://id.loc.gov/authorities/names/n$n",
+        s"http://id.loc.gov/viaf.org/b$n")) // both an LC and a VIAF link
+      val lines = Seq.newBuilder[(String, String)]
+      (1 to 12).foreach { id =>
+        // ids repeat across files (A4)
+        Seq.fill(1 + rnd.nextInt(2))(pick(files)).foreach { f =>
+          if (rnd.nextBoolean()) lines += fastLine(id, pref, s"\"Pref $id $f\"") -> f
+          Seq.fill(rnd.nextInt(3))(s"\"Alt ${rnd.nextInt(5)}\"")
+            .foreach(a => lines += fastLine(id, alt, a) -> f)
+          Seq.fill(rnd.nextInt(3))(pick(uris))
+            .foreach(u => lines += fastLine(id, same, s"<$u>") -> f)
+        }
+      }
+      // labels keyed by full URIs and by bare segments, from every file;
+      // a one-code-point literal has a null label but a normalized form
+      Seq.fill(14)(pick(uris)).foreach { u =>
+        val subject = if (rnd.nextInt(4) == 0) u.split('/').last else u
+        val text = if (rnd.nextInt(5) == 0) "Q" else s"Ext ${rnd.nextInt(9)}"
+        lines += s"<$subject> <$lbl> \"$text\" ." -> pick(files)
+      }
+      val frags = FastIngest.project(FastIngest.parse(lines.result().toDF("line", "doc_type")))
+      val want = byId(reference(frags))
+      assert(byId(FastIngest.termDocs(frags)) === want, s"round $round")
+      val plain = byId(FastIngest.buildDocsTagged(frags.where($"doc_type".isin(termTypes: _*))))
+      enriched += want.count { case (id, r) => r != plain(id) }
+      val termLabelsOnly = frags.where($"kind" === "fast" || $"doc_type".isin(termTypes: _*))
+      fromAgents += byId(FastIngest.termDocs(termLabelsOnly))
+        .count { case (id, r) => r != want(id) }
+      droppedEvents += (plain.keySet -- want.keySet).size
+      nullLabels += want.values.count( // from "Q", whose label is null
+        _(7).asInstanceOf[scala.collection.Seq[String]].contains("q"))
+      bothHosts += want.count { case (id, r) => r != plain(id) &&
+        r(5).asInstanceOf[scala.collection.Seq[String]].exists(_.contains("viaf.org")) }
+    }
+    // the corpora reach every case the fused path must get right
+    assert(Seq(enriched, fromAgents, droppedEvents, nullLabels, bothHosts).forall(_ > 0),
+      s"enriched=$enriched fromAgents=$fromAgents droppedEvents=$droppedEvents " +
+        s"nullLabels=$nullLabels bothHosts=$bothHosts")
   }
 
   test("agent otherId: LC link preferred over VIAF, linkless dropped") {

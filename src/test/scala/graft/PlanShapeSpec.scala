@@ -95,6 +95,39 @@ class PlanShapeSpec extends SparkSpec {
     assert(countOf(p, "project_nt(") === 1, p)
   }
 
+  test("termDocs: one shuffle, no sort-merge join, no aggregate under the label broadcast") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import graft.ingest.FastIngest
+    val frags = FastIngest.project(FastIngest.parse(Seq(
+        ("<http://id.worldcat.org/fast/1> <http://www.w3.org/2004/02/skos/core#prefLabel> \"Jazz\" .",
+          "Topical"),
+        ("<http://id.worldcat.org/fast/1> <http://schema.org/sameAs> <http://viaf.org/viaf/9> .",
+          "Topical"),
+        ("<http://viaf.org/viaf/9> <http://www.w3.org/2000/01/rdf-schema#label> \"Ext\" .",
+          "Personal"))
+      .toDF("line", "doc_type").repartition(2)))
+      .persist() // as IngestJob.runAll holds its fragments
+    try {
+      val plan = FastIngest.termDocs(frags).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      val text = plan.toString
+      // the persisted frame's own plan sits in the cache, not in this tree
+      assert(plan.collect { case e: ShuffleExchangeExec => e }.size === 1,
+        s"term path shuffles more than once:\n$text")
+      assert(plan.collect { case j: SortMergeJoinExec => j }.isEmpty, text)
+      val broadcasts = plan.collect { case b: BroadcastExchangeExec => b }
+      assert(broadcasts.nonEmpty, s"label side not broadcast:\n$text")
+      assert(broadcasts.forall(_.collect { case a: BaseAggregateExec => a }.isEmpty),
+        s"label side aggregated before the broadcast:\n$text")
+    } finally frags.unpersist()
+  }
+
   test("mergeBatch: one shuffle on the bucket, none after the aggregate, pruned stored scan") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.{Attribute, DynamicPruningExpression, Literal}

@@ -106,6 +106,33 @@ class SinksSpec extends SparkSpec {
     assert(table() === expect)
   }
 
+  test("mergeInto: each bucket of a new version is one file, whatever the input partitioning") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val path = Files.createTempDirectory("graft_merge_files").toString + "/t"
+    def ls(p: Path): Seq[Path] = scala.util.Using.resource(Files.list(p))(_.iterator().asScala.toList)
+    def versions(): Set[Path] = ls(Paths.get(path, "data")).toSet
+    // data files in each `_bucket=<b>` directory of one version
+    def filesPerBucket(version: Path): Map[String, Int] =
+      ls(version).filter(_.getFileName.toString.startsWith("_bucket="))
+        .map(b => b.getFileName.toString -> ls(b).count(_.getFileName.toString.endsWith(".parquet")))
+        .toMap
+    val create = spark.range(0, 400, 1, 8).select($"id".as("k"), $"id".cast("string").as("v"))
+    Sinks.mergeInto(spark, path, create, "k", numBuckets = 8)
+    val v0 = versions()
+    assert(v0.size === 1)
+    val first = filesPerBucket(v0.head)
+    assert(first.size === 8 && first.values.forall(_ == 1), first)
+    // stored rows of the touched buckets plus a batch over 6 partitions
+    val update = spark.range(0, 400, 7, 6).select($"id".as("k"), lit("u").as("v"))
+    Sinks.mergeInto(spark, path, update, "k", numBuckets = 8)
+    val v1 = versions() -- v0
+    assert(v1.size === 1)
+    val second = filesPerBucket(v1.head)
+    assert(second.nonEmpty && second.values.forall(_ == 1), second)
+    assert(Sinks.readMerged(spark, path).count() === 400)
+  }
+
   test("mergeInto: a fully-emptied bucket does not resurrect deleted keys") {
     val path = java.nio.file.Files.createTempDirectory("graft_merge_empty").toString + "/t"
     def bucketOf(k: Long): Int = spark.range(1)
