@@ -10,6 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.ingest.{FastIngest, Sinks}
+import graft.ops.Iterate
 import graft.sources.NtReader
 
 /** End-to-end ingest job — the engine's equivalent of the reference's
@@ -38,14 +39,19 @@ object IngestJob {
                              missingPref: Long)
 
   /** One-command multi-file ingest, replacing the reference's 8 worker
-    * forks with branches over ONE cached parse:
+    * forks with branches over ONE materialized parse:
     *
     *  - pre-flight validation of the 7 FAST files (`fs.statSync` twin,
     *    `lib/ingest.js:43-51`);
     *  - every file is parsed/projected once, tagged with its doc type from
-    *    the filename (P7); the Event file feeds BOTH paths from the same
-    *    cached fragments — the virtual `FASTTermEvent` pass
-    *    (`lib/ingest.js:197,298-303`) without a second read;
+    *    the filename (P7), and the fragments are materialized as rows by
+    *    [[Iterate.materialize]] before either path reads them: a local
+    *    session keeps them as a `localCheckpoint` (rows in executor
+    *    storage, no column encoding), a cluster session as a reliable
+    *    checkpoint (files that survive executor loss). The Event file
+    *    feeds BOTH paths from the same fragments — the virtual
+    *    `FASTTermEvent` pass (`lib/ingest.js:197,298-303`) without a
+    *    second read;
     *  - term path: [[FastIngest.termDocs]] — term-file + Event fragments
     *    probe all files' external rdfs:label rows (broadcast) for their
     *    sameAs links, then ONE shuffle groups them into docs (cross-file
@@ -64,7 +70,7 @@ object IngestJob {
     * [[Sinks.publish]]. If either write fails, this waits for the other,
     * deletes the staging directory and rethrows the first failure with any
     * second one suppressed; the previous tables stay as they were. The
-    * cached fragments are released only after both writes end.
+    * materialized fragments are released only after both writes end.
     *
     * A `_staging-*` directory left by a killed run is deleted at the start
     * of the next one; like [[Sinks.mergeInto]], this assumes one writer per
@@ -97,9 +103,9 @@ object IngestJob {
     def attempt[A](write: => A): Option[A] =
       try Some(write) catch { case e: Throwable => errors.add(e); None }
 
-    val fragments = FastIngest
-      .project(NtReader.triplesTagged(spark, RequiredFiles.map(f => s"$ntDir/$f"): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val materialized = Iterate.materialize(FastIngest
+      .project(NtReader.triplesTagged(spark, RequiredFiles.map(f => s"$ntDir/$f"): _*)))
+    val fragments = materialized.df
     try {
       // agent path — viafUpdate is lazy, so the sink write is the ONLY
       // materialization of the updated table (no pre-write checkpoint)
@@ -121,7 +127,7 @@ object IngestJob {
       val fast = fastReport.get
       RunReport(fast.rows, viafReport.map(_.rows).getOrElse(0L), fast.badRows, fast.missingPref)
     } finally {
-      fragments.unpersist()
+      materialized.release()
       fs.delete(staging, true)
     }
   }

@@ -13,9 +13,9 @@ import java.text.Normalizer
   *
   * `normalize` is deliberately mirror-able in ANSI SQL
   * (`lower` + `strip_accents` + two `regexp_replace`) so the DuckDB oracle can
-  * replicate it exactly; `singularize` uses a fixed rule chain that is likewise
-  * regex-expressible (see `QueryHelpers.normSql` and `IngestQueries.singSql`
-  * in graft.queries).
+  * replicate it exactly; `singularize` is a fixed chain of suffix rules that is
+  * likewise regex-expressible (see `QueryHelpers.normSql` and
+  * `IngestQueries.singSql` in graft.queries).
   */
 object Normalize {
 
@@ -69,14 +69,18 @@ object Normalize {
   /** English plural→singular of the FINAL token. Irregular forms first
     * (exact final-token match — the class the reference's external
     * `singularize` package handles that suffix rules can't), then the
-    * rule chain (anchored at end-of-string, so it naturally applies to
-    * the last token only):
+    * rule chain, tested as plain suffixes of the whole string (so it
+    * naturally applies to the last token only):
     *   0. irregulars: men→man, women→woman, children→child, people→person,
     *      feet→foot, teeth→tooth, geese→goose, mice→mouse, oxen→ox
-    *   1. `[a-z]ies$`            → `y`   (policies → policy)
-    *   2. `(ss|ch|sh|x|z)es$`    → drop `es` (boxes → box, churches → church)
-    *   3. ends `ss`/`[aiou]s`    → unchanged (glass, virus, basis, alias, chaos)
-    *   4. `s$`                   → drop `s`
+    *   1. ends `[a-z]ies`               → `y`   (policies → policy)
+    *   2. ends `sses|ches|shes|xes|zes` → drop `es` (boxes → box, churches → church)
+    *   3. ends `ss`/`[aiou]s`           → unchanged (glass, virus, basis, alias, chaos)
+    *   4. ends `[a-z0-9]s`              → drop `s`
+    * The rules are defined as four `.*`-prefixed regexes, which
+    * NormalizeSpec keeps as the reference; `.` does not match a line
+    * terminator, so a string holding one (see `hasLineTerminator`)
+    * passes the chain unchanged.
     * The reference's `singularize` comes from an unvendored package; these
     * rules are our pinned deterministic definition (SURVEY.md §1.4), and
     * they are mirrored regex-for-regex in the DuckDB oracle
@@ -87,11 +91,6 @@ object Normalize {
     "people" -> "person", "feet" -> "foot", "teeth" -> "tooth",
     "geese" -> "goose", "mice" -> "mouse", "oxen" -> "ox")
 
-  private val Ies  = ".*[a-z]ies$".r.pattern
-  private val Es   = ".*(sses|ches|shes|xes|zes)$".r.pattern
-  private val Keep = ".*(ss|[aiou]s)$".r.pattern
-  private val S    = ".*[a-z0-9]s$".r.pattern
-
   def singularize(s: String): String = {
     if (s == null) return null
     val lastTok = s.substring(s.lastIndexOf(' ') + 1)
@@ -100,12 +99,34 @@ object Normalize {
         s.substring(0, s.length - lastTok.length) + singular
       case None =>
         val n = s.length
-        if (Ies.matcher(s).matches) s.substring(0, n - 3) + "y"
-        else if (Es.matcher(s).matches) s.substring(0, n - 2)
-        else if (Keep.matcher(s).matches) s
-        else if (S.matcher(s).matches) s.substring(0, n - 1)
-        else s
+        // every rule needs a final `s` after at least one char
+        if (n < 2 || s.charAt(n - 1) != 's' || hasLineTerminator(s)) s
+        else if (n >= 4 && s.endsWith("ies") && isLower(s.charAt(n - 4)))
+          s.substring(0, n - 3) + "y"
+        else if (s.endsWith("sses") || s.endsWith("ches") || s.endsWith("shes") ||
+            s.endsWith("xes") || s.endsWith("zes")) s.substring(0, n - 2)
+        else {
+          val c = s.charAt(n - 2)
+          if (c == 's' || c == 'a' || c == 'i' || c == 'o' || c == 'u') s
+          else if (isLower(c) || (c >= '0' && c <= '9')) s.substring(0, n - 1)
+          else s
+        }
     }
+  }
+
+  private def isLower(c: Char): Boolean = c >= 'a' && c <= 'z'
+
+  /** Does `s` hold a char regex `.` does not match: `\n`, `\r`, `\u0085`,
+    * `\u2028` or `\u2029`?
+    */
+  private def hasLineTerminator(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '\n' || c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029') return true
+      i += 1
+    }
+    false
   }
 
   /** The reference's full pipeline: `singularize(normalizeAndDiacritics(x))`. */

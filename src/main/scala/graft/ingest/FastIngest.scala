@@ -82,7 +82,9 @@ object FastIngest {
 
   /** P7 — doc type from the source filename (`lib/ingest.js:201-210`):
     * substring match on the 8 FAST file names; the virtual TermEvent pass
-    * maps to Event. Use with `input_file_name()` for multi-file reads.
+    * maps to Event. For multi-file reads, feed it the scan's
+    * `_metadata.file_name` (as [[graft.sources.NtReader.triplesTagged]]
+    * does) or `input_file_name()`.
     * Only the last path segment is matched, so a directory named like a
     * FAST file (`/data/FASTPersonal-2024/`) does not tag every file in it.
     */
@@ -108,7 +110,7 @@ object FastIngest {
     buildDocsWith(fragments, constantType = Some(docType))
 
   /** A1 variant for multi-file ingest where fragments carry a per-row
-    * `doc_type` (from P7/`input_file_name`): a doc's type is the max over
+    * `doc_type` (from P7, [[typeFromFilename]]): a doc's type is the max over
     * its contributing files' types — the deterministic stand-in for the
     * reference's file-order-dependent overwrite (`lib/ingest.js:291`).
     */

@@ -46,7 +46,7 @@ private[graft] object QueryHelpers {
     * [[GraftSession.local]] uses for its checkpoint directory), so repeated
     * Verify and Bench runs do not fill the temp dir. A directory the query
     * moves elsewhere before exit is not followed. The only temp-path call
-    * under `graft/queries/` (ContractSpec).
+    * under `graft/queries/` and in the specs (ContractSpec).
     */
   def scratchDir(prefix: String,
                  parent: java.nio.file.Path = java.nio.file.Paths.get(

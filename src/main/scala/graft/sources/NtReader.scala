@@ -25,11 +25,14 @@ object NtReader {
       spark.read.text(paths: _*).withColumnRenamed("value", "line"))
 
   /** Read NT files keeping per-file provenance: adds `doc_type` derived
-    * from the FAST filename convention (P7).
+    * from the FAST filename convention (P7). The name comes from the
+    * scan's `_metadata.file_name`, which the text scan fills once per
+    * file, not from `input_file_name()`, which looks the path up for
+    * every line.
     */
   def triplesTagged(spark: SparkSession, paths: String*): DataFrame =
     FastIngest.parse(
       spark.read.text(paths: _*)
         .select(col("value").as("line"),
-          FastIngest.typeFromFilename(input_file_name()).as("doc_type")))
+          FastIngest.typeFromFilename(col("_metadata.file_name")).as("doc_type")))
 }

@@ -1,8 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
+
+import graft.queries.QueryHelpers.scratchDir
 
 /** Runtime-optimizer proofs beyond SkewJoinSpec: the two remaining
   * adaptive behaviors the 100 TB contract leans on must actually fire,
@@ -30,7 +30,7 @@ class AdaptiveSpec extends SparkSpec {
     val saved = tuned.keys.map(k => k -> spark.conf.getOption(k)).toMap
     tuned.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      val dir = Files.createTempDirectory("graft_rbf").toString
+      val dir = scratchDir("graft_rbf").toString
       (1 to 50000).map(i => (i.toLong, s"payload-$i"))
         .toDF("k", "v").write.parquet(s"$dir/fact")
       (1 to 2000).map(i => (i.toLong, i % 7)).toDF("k", "tag")
@@ -59,7 +59,7 @@ class AdaptiveSpec extends SparkSpec {
     val saved = tuned.keys.map(k => k -> spark.conf.getOption(k)).toMap
     tuned.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      val dir = Files.createTempDirectory("graft_aqebhj").toString
+      val dir = scratchDir("graft_aqebhj").toString
       (1 to 50000).map(i => (i.toLong, s"payload-$i")).toDF("k", "v")
         .write.parquet(s"$dir/fact")
       (1 to 200).map(i => (i.toLong, s"d$i")).toDF("k", "w")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ops.Bloom
+import graft.queries.QueryHelpers.scratchDir
 
 /** Bloom-filter build + native probe: no false negatives, bounded false
   * positives, lossless pruning.
@@ -46,7 +47,7 @@ class BloomSpec extends SparkSpec {
   test("filter survives a parquet round-trip: build once, prune later") {
     val keys = (1 to 1000).map(_.toLong).toDF("k")
     val bloom = Bloom.build(keys, "k", mBits = 1 << 14, k = 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom").toString
+    val dir = scratchDir("graft_bloom").toString
     bloom.write.mode("overwrite").parquet(dir)
     // a later job (different session lifecycle) reads the stored filter
     val reread = spark.read.parquet(dir)

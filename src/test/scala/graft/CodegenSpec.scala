@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.QueryHelpers.scratchDir
+
 /** Guards the codegen contract of the native expressions: every generated
   * static call must COMPILE. A companion method whose name clashes with a
   * class member (e.g. `eval`) gets no static forwarder, Janino fails, and
@@ -62,7 +64,7 @@ class CodegenSpec extends SparkSpec {
 
   test("FastIngest.project compiles to methods small enough for HotSpot to JIT") {
     // a projection stage past the JIT limit runs every triple interpreted
-    val dir = java.nio.file.Files.createTempDirectory("codegen-size")
+    val dir = scratchDir("codegen-size")
     val file = dir.resolve("FASTTopical.nt")
     java.nio.file.Files.write(file, java.util.Arrays.asList(
       "<http://id.worldcat.org/fast/1> <http://www.w3.org/2004/02/skos/core#prefLabel> \"Jazz\"@en .",
@@ -77,7 +79,7 @@ class CodegenSpec extends SparkSpec {
   test("FastIngest.termDocs compiles to methods small enough for HotSpot to JIT") {
     // the fused stage probes the labels and partially aggregates once per
     // fragment; the projection it follows once ran interpreted this way
-    val dir = java.nio.file.Files.createTempDirectory("codegen-size")
+    val dir = scratchDir("codegen-size")
     val file = dir.resolve("FASTTopical.nt")
     java.nio.file.Files.write(file, java.util.Arrays.asList(
       "<http://id.worldcat.org/fast/1> <http://www.w3.org/2004/02/skos/core#prefLabel> \"Jazz\"@en .",

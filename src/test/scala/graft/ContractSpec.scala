@@ -174,16 +174,15 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     assert(offenders.isEmpty, s"endgame logic outside LocalEndgame: ${offenders.mkString("; ")}")
   }
 
-  // A query's temp directory outlives the run unless something deletes
-  // it: every one goes through QueryHelpers.scratchDir, which does at
-  // JVM exit.
-  test("queries make temp paths only through QueryHelpers.scratchDir") {
-    import java.nio.file.{Files, Paths}
+  // A query's or a spec's temp directory outlives the run unless something
+  // deletes it: every one goes through QueryHelpers.scratchDir, which does
+  // at JVM exit.
+  private def tempPathOffenders(root: java.nio.file.Path): Seq[String] = {
+    import java.nio.file.Files
     import scala.jdk.CollectionConverters._
-    val root = Paths.get("src/main/scala/graft/queries")
     assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
     val temp = """\bcreateTemp(?:Directory|File)\b""".r
-    val offenders = Files.walk(root).iterator().asScala
+    Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         val src = Files.readString(p)
@@ -193,7 +192,17 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
           .filterNot(m => helper.exists(h => h.start <= m.start && m.end <= h.end))
           .map(m => s"${p.getFileName}:${src.take(m.start).count(_ == '\n') + 1}")
       }.toSeq.sorted
+  }
+
+  test("queries make temp paths only through QueryHelpers.scratchDir") {
+    val offenders = tempPathOffenders(java.nio.file.Paths.get("src/main/scala/graft/queries"))
     assert(offenders.isEmpty,
       s"temp paths made outside QueryHelpers.scratchDir: ${offenders.mkString(", ")}")
+  }
+
+  test("specs make temp paths only through QueryHelpers.scratchDir") {
+    val offenders = tempPathOffenders(java.nio.file.Paths.get("src/test"))
+    assert(offenders.isEmpty,
+      s"spec temp paths made outside QueryHelpers.scratchDir: ${offenders.mkString(", ")}")
   }
 }

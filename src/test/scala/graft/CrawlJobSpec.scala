@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.PdfText
 import graft.queries.CrawlQueries
+import graft.queries.QueryHelpers.scratchDir
 import graft.sources.WarcReader
 
 /** CrawlJob integration: mixed HTML/PDF shards → documents + frontier +
@@ -14,7 +15,7 @@ import graft.sources.WarcReader
 class CrawlJobSpec extends SparkSpec {
 
   test("end to end: dispatch, quality gate, dedup, frontier, quarantine") {
-    val dir = java.nio.file.Files.createTempDirectory("crawljob_spec_")
+    val dir = scratchDir("crawljob_spec_")
     def html(id: Long, text: String) = WarcReader.WriteRec("response",
       s"http://site.example/doc/$id", "", 200, "text/html; charset=utf-8",
       CrawlQueries.htmlFixturePage(id, text).getBytes(UTF_8))
@@ -44,7 +45,7 @@ class CrawlJobSpec extends SparkSpec {
       WarcReader.writeShardGz(recs))
     java.nio.file.Files.write(dir.resolve("bad.warc.gz"),
       "garbage".getBytes(UTF_8))
-    val out = java.nio.file.Files.createTempDirectory("crawljob_out_").toString
+    val out = scratchDir("crawljob_out_").toString
     val r = CrawlJob.run(spark, dir.toString, out)
     assert(r.records === 8, "404 + conversion + robots.txt all parse as records")
     assert(r.quarantined === 1)

@@ -12,10 +12,13 @@ import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 
 import graft.ingest.{FastIngest, Sinks}
+import graft.queries.QueryHelpers.scratchDir
 import graft.sources.NtReader
 
 /** A commit protocol that fails the commit of every write to a path
@@ -37,7 +40,7 @@ class FailFastCommit(jobId: String, path: String, dynamic: Boolean)
 class IngestJobSpec extends SparkSpec {
 
   test("NT files on disk → fast table + viaf update, end to end") {
-    val dir = Files.createTempDirectory("graft_job").toString
+    val dir = scratchDir("graft_job").toString
     Files.writeString(Paths.get(s"$dir/FASTTopical.nt"),
       """<http://id.worldcat.org/fast/101> <http://www.w3.org/2004/02/skos/core#prefLabel> "Alpha Conference" .
         |<http://id.worldcat.org/fast/101> <http://schema.org/sameAs> <http://viaf.org/viaf/900> .
@@ -78,7 +81,7 @@ class IngestJobSpec extends SparkSpec {
     * file, two Event docs (one an agent), and one agent per agent file.
     */
   private def layout(prefix: String): String = {
-    val dir = Files.createTempDirectory(prefix).toString
+    val dir = scratchDir(prefix).toString
     // term files: one doc each; doc 1's LC link is labelled only in an
     // agent file (Corporate, below)
     Files.writeString(Paths.get(s"$dir/FASTTopical.nt"),
@@ -124,6 +127,15 @@ class IngestJobSpec extends SparkSpec {
   private def rowsOf(path: String): Seq[String] =
     Sinks.readTable(spark, path).collect().map(_.toString).toSeq.sorted
 
+  /** Entries in the session's checkpoint directory. getCheckpointDir is a
+    * file: URI whose UUID subdir is only created on first checkpoint — an
+    * absent dir counts as zero entries.
+    */
+  private def ckptEntries: Long = spark.sparkContext.getCheckpointDir
+    .map(u => Paths.get(java.net.URI.create(u).getPath))
+    .filter(Files.isDirectory(_))
+    .map(p => Files.list(p).count()).getOrElse(0L)
+
   /** What runAll must leave behind after any outcome: no staging
     * directory, no persisted RDD beyond `rdds0`, no live thread of its own.
     */
@@ -141,7 +153,7 @@ class IngestJobSpec extends SparkSpec {
     * fails when it reaches the row keyed `id`.
     */
   private def failingRow(viaf: DataFrame, id: String): DataFrame = {
-    val path = Files.createTempDirectory("graft_viaf_in").resolve("viaf").toString
+    val path = scratchDir("graft_viaf_in").resolve("viaf").toString
     viaf.write.parquet(path)
     spark.read.parquet(path).withColumn("lcId",
       when(col("_id") === id, raise_error(lit("viaf row failed"))).otherwise(col("lcId")))
@@ -154,23 +166,15 @@ class IngestJobSpec extends SparkSpec {
     val dir = layout("graft_job_all")
     val viaf = viafTable
 
-    // Single-materialization sink path (round-8): the writes inside runAll
-    // must be the ONLY materializations — no pre-write checkpoint (neither
-    // reliable checkpoint files nor localCheckpoint RDD blocks) and no
-    // cache surviving the call.
+    // A local session materializes the fragments as localCheckpoint rows
+    // and releases them after both writes: no checkpoint files, no
+    // persisted RDD and no cache survive the call.
     GraftSession.releaseAll(spark)
-    // getCheckpointDir is a file: URI whose UUID subdir is only created on
-    // first checkpoint — absent dir means zero checkpoints, which is the point
-    val ckptDir = spark.sparkContext.getCheckpointDir
-      .map(u => Paths.get(java.net.URI.create(u).getPath))
-    def ckptEntries: Long = ckptDir.filter(Files.isDirectory(_))
-      .map(p => Files.list(p).count()).getOrElse(0L)
     val (ckpt0, rdds0) = (ckptEntries, spark.sparkContext.getPersistentRDDs.size)
 
     val report = IngestJob.runAll(spark, dir, s"$dir/out", Some(viaf))
 
-    assert(ckptEntries === ckpt0,
-      "runAll wrote checkpoint files on the sink path — result must flow straight to the sink")
+    assert(ckptEntries === ckpt0, "runAll left checkpoint files behind")
     assertNothingLeft(s"$dir/out", rdds0)
     assert(spark.sharedState.cacheManager.isEmpty,
       "runAll leaked CacheManager entries past the sink write")
@@ -202,7 +206,7 @@ class IngestJobSpec extends SparkSpec {
   }
 
   test("runAll: a missing FAST file fails pre-flight and writes nothing") {
-    val dir = Files.createTempDirectory("graft_job_missing").toString
+    val dir = scratchDir("graft_job_missing").toString
     IngestJob.RequiredFiles.filterNot(_ == "FASTPersonal.nt").foreach { f =>
       Files.writeString(Paths.get(s"$dir/$f"),
         "<http://id.worldcat.org/fast/1> <http://www.w3.org/2004/02/skos/core#prefLabel> \"One\" .\n")
@@ -334,5 +338,71 @@ class IngestJobSpec extends SparkSpec {
     assert(seen.forall(_._1 == "graft-runall-group"), seen)
     assert(seen.flatMap(j => Option(writers.get(j._2))).toSet === Set("writeFast", "writeViaf"),
       s"jobs $seen, writers $writers")
+  }
+
+  /** One SQL execution: its description (the call site, such as
+    * `localCheckpoint at Iterate.scala:104`) and the node names of each
+    * plan it reported (the first plan and every adaptive update).
+    */
+  private final case class Execution(description: String, nodes: Set[String]) {
+    def scansText: Boolean = nodes.exists(_.startsWith("Scan text"))
+  }
+
+  /** Every SQL execution started while `run` runs. */
+  private def executions(run: => Unit): Seq[Execution] = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentHashMap[Long, Execution]
+    def names(p: SparkPlanInfo): Set[String] = p.children.flatMap(names).toSet + p.nodeName
+    def add(id: Long, e: Execution): Unit =
+      seen.merge(id, e, (a, b) => Execution(a.description + b.description, a.nodes ++ b.nodes))
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          add(s.executionId, Execution(s.description, names(s.sparkPlanInfo)))
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          add(u.executionId, Execution("", names(u.sparkPlanInfo)))
+        case _ =>
+      }
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try run
+    finally {
+      TestBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    seen.values.asScala.toSeq
+  }
+
+  test("runAll: fragments are read back as rows, and the NT text is scanned once") {
+    val dir = layout("graft_job_plans")
+    val execs = executions(IngestJob.runAll(spark, dir, s"$dir/out", Some(viafTable)))
+    val columnar = execs.filter(_.nodes.contains("InMemoryTableScan"))
+    assert(columnar.isEmpty, s"executions reading a columnar cache: $columnar")
+    assert(execs.count(_.scansText) === 1, s"executions scanning the NT text: $execs")
+    assert(execs.filter(_.scansText).forall(_.description.startsWith("localCheckpoint")), execs)
+  }
+
+  test("runAll on the cluster path: checkpointed fragments are released, also after a failed write") {
+    val dir = layout("graft_job_cluster")
+    val out = s"$dir/out"
+    val key = "spark.graft.iterate.localCheckpoint"
+    GraftSession.releaseAll(spark)
+    val (ckpt0, rdds0) = (ckptEntries, spark.sparkContext.getPersistentRDDs.size)
+    spark.conf.set(key, "false")
+    try {
+      val execs = executions(IngestJob.runAll(spark, dir, out, Some(viafTable)))
+      // one reliable checkpoint scans the text; the writes read its files
+      assert(execs.count(_.scansText) === 1, execs)
+      assert(execs.filter(_.scansText).forall(_.description.startsWith("checkpoint")), execs)
+      assert(Sinks.readTable(spark, s"$out/fast").count() === 5)
+      assert(ckptEntries === ckpt0, "runAll left checkpoint files behind")
+      assertNothingLeft(out, rdds0)
+
+      val err = intercept[Exception](IngestJob.runAll(spark, dir, out, Some(failingRow(viafTable, "vD"))))
+      assert(messages(err).exists(_.contains("viaf row failed")), err)
+      assert(ckptEntries === ckpt0, "a failed runAll left checkpoint files behind")
+      assertNothingLeft(out, rdds0)
+    } finally spark.conf.unset(key)
   }
 }

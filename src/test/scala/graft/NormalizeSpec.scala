@@ -66,6 +66,71 @@ class NormalizeSpec extends AnyFunSuite {
     assert(Normalize.singularize("ramen shops") === "ramen shop")
   }
 
+  /** The rule chain in its defining form, four `.*`-prefixed regexes: the
+    * reference for [[Normalize.singularize]]'s suffix tests. Returns which
+    * branch fired with the result.
+    */
+  private object RegexSingularize {
+    private val Ies  = ".*[a-z]ies$".r.pattern
+    private val Es   = ".*(sses|ches|shes|xes|zes)$".r.pattern
+    private val Keep = ".*(ss|[aiou]s)$".r.pattern
+    private val S    = ".*[a-z0-9]s$".r.pattern
+
+    def apply(s: String): (String, String) = {
+      val lastTok = s.substring(s.lastIndexOf(' ') + 1)
+      Normalize.Irregulars.get(lastTok) match {
+        case Some(singular) =>
+          "irregular" -> (s.substring(0, s.length - lastTok.length) + singular)
+        case None =>
+          val n = s.length
+          if (Ies.matcher(s).matches) "ies" -> (s.substring(0, n - 3) + "y")
+          else if (Es.matcher(s).matches) "es" -> s.substring(0, n - 2)
+          else if (Keep.matcher(s).matches) "keep" -> s
+          else if (S.matcher(s).matches) "s" -> s.substring(0, n - 1)
+          else "none" -> s
+      }
+    }
+  }
+
+  test("singularize suffix tests agree with the regex rule chain on random strings") {
+    val terminators = "\n\r\u0085\u2028\u2029"
+    val alphabets = Seq(
+      "abcdefghijklmnopqrstuvwxyz0123456789 ",
+      "abcsxzhieoAZSIES ,.-'()!?09",
+      "aeiousxzch \u00e9\u00df\u00f1\u4e2d\u00c9\uD83D\uDE00\u0301\u00a0")
+    // endings that reach every rule and its near misses
+    val endings = Seq("ies", "Ies", "9ies", " ies", "sses", "ches", "shes", "xes", "zes", "ses",
+      "hes", "es", "ss", "as", "is", "os", "us", "bs", "9s", "Ss", "-s", " s", "s", "",
+      "\u00e9s", "\u00e9ies") ++ Normalize.Irregulars.keys.flatMap(k => Seq(k, " " + k, k + "s"))
+    val rnd = new scala.util.Random(15)
+    val fired = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    var guarded = 0
+    for (alphabet <- alphabets; withTerminator <- Seq(false, true); _ <- 1 to 4000) {
+      val body = Seq.fill(rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.length))).mkString
+      val plain = body + endings(rnd.nextInt(endings.size))
+      val s = if (!withTerminator) plain else {
+        val at = rnd.nextInt(plain.length + 1)
+        plain.take(at) + terminators(rnd.nextInt(terminators.length)) + plain.drop(at)
+      }
+      val (branch, expected) = RegexSingularize(s)
+      assert(Normalize.singularize(s) === expected, s"input: ${s.map(_.toInt)}")
+      fired(branch) += 1
+      // the guard decided: without the terminator a rule would have fired
+      if (withTerminator && branch == "none" &&
+          RegexSingularize(s.filterNot(terminators.contains(_)))._1 != "none") guarded += 1
+    }
+    Seq("irregular", "ies", "es", "keep", "s", "none").foreach(b =>
+      assert(fired(b) > 100, s"rule $b fired ${fired(b)} times: $fired"))
+    assert(guarded > 100, s"line-terminator guard decided $guarded strings")
+    // each terminator before and after a word a rule would change
+    terminators.foreach { t =>
+      Seq("policies", "boxes", "widgets").foreach { w =>
+        assert(Normalize.singularize(t + w) === t + w)
+        assert(Normalize.singularize(w + t) === w + t)
+      }
+    }
+  }
+
   private val rng = new scala.util.Random(42)
   private def randomString(): String = {
     val alphabet = "aA zZ09!?,.--()éüßñ\t\n\"'\\éÉ中日"

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ingest.MergeFastDocs
 import graft.model.{FastDoc, MediaRecord}
 import graft.ops.{Dedup, Multimodal, Similarity}
+import graft.queries.QueryHelpers.scratchDir
 
 /** Unit tests for the LLM-pipeline operators and the typed merge. */
 class OpsSpec extends SparkSpec {
@@ -852,7 +853,7 @@ class OpsSpec extends SparkSpec {
   test("withJobScopedCheckpoint: dir used, deleted after, previous dir restored") {
     import java.nio.file.{Files, Paths}
     val prev = spark.sparkContext.getCheckpointDir
-    val scoped = Files.createTempDirectory("graft_jobckpt").toString
+    val scoped = scratchDir("graft_jobckpt").toString
     val result = GraftSession.withJobScopedCheckpoint(spark, scoped) { s =>
       // an Iterate-backed op writes its rounds under the scoped dir
       val pairs = (1L until 20L).map(i => (i, i + 1)).toDF("a", "b")
@@ -998,7 +999,7 @@ class OpsSpec extends SparkSpec {
 
   test("sizedWrite bounds file count and rows per file with disjoint key ranges") {
     import graft.ops.Layout
-    val path = java.nio.file.Files.createTempDirectory("graft_sized").toString
+    val path = scratchDir("graft_sized").toString
     val rows = (1L to 10000L).toDF("k")
     Layout.sizedWrite(rows, path, col("k"), filesWanted = 4, maxRowsPerFile = 3000)
     val files = new java.io.File(path).listFiles()

@@ -2,6 +2,8 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import graft.queries.QueryHelpers.scratchDir
+
 /** Physical-plan shape assertions for the scale-critical rewrites: these
   * queries were rebuilt specifically to remove exchanges (the 100 TB
   * bottleneck), and a silent regression back to the shuffled shape would
@@ -148,7 +150,7 @@ class PlanShapeSpec extends SparkSpec {
       ids.map(i => s"<http://id.worldcat.org/fast/$i> " +
         s"<http://www.w3.org/2004/02/skos/core#prefLabel> \"Doc $i\" .").toDF("line"))),
       lit("Topical"))
-    val table = java.nio.file.Files.createTempDirectory("graft_merge_plan").toString + "/fast"
+    val table = scratchDir("graft_merge_plan").toString + "/fast"
     StreamingIngest.mergeBatch(spark, docs(1 to 400), table)
 
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.QueryHelpers.scratchDir
+
 /** Plan contracts for the parquet scan path: predicates must reach the
   * scan (`PushedFilters`) and the scan must read ONLY the referenced
   * columns (`ReadSchema`) — a scan reading 11 lineitem columns for a
@@ -45,7 +47,7 @@ class PushdownSpec extends SparkSpec {
 
   test("partition predicate prunes directories, not rows") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val path = java.nio.file.Files.createTempDirectory("graft_prune_spec").toString
+    val path = scratchDir("graft_prune_spec").toString
     docs.write.mode("overwrite").partitionBy("lang").parquet(path)
     val plan = planOf(spark.read.parquet(path).where(col("lang") === "en"))
     assert(plan.contains("PartitionFilters") && plan.contains("lang"),

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Profile, Quality, Sampling}
+import graft.queries.QueryHelpers.scratchDir
 
 /** Corpus-quality signals: duplicate n-gram fraction, z-score outliers,
   * k-fold assignment, fixed-width histograms.
@@ -267,7 +268,7 @@ class QualitySpec extends SparkSpec {
   }
 
   test("text_entropy query: uniform text maxes entropy, repetition lowers it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_entropy").toString
+    val dir = scratchDir("graft_entropy").toString
     Seq(
       (1L, "a b c d e f g h", "en", "s", 15L),     // 8 distinct of 8 → ln(8)
       (2L, "a a a a a a a a", "en", "s", 15L),     // degenerate → 0
@@ -282,7 +283,7 @@ class QualitySpec extends SparkSpec {
   }
 
   test("text_lm_score query: corpus-common tokens outscore corpus-rare ones") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lm").toString
+    val dir = scratchDir("graft_lm").toString
     Seq(
       (1L, "common common common", "en", "s", 20L),
       (2L, "rare1 rare2 rare3", "en", "s", 17L),

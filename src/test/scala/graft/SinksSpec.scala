@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Sinks
+import graft.queries.QueryHelpers.scratchDir
 
 /** Sink behaviors: overwrite + observe metrics, the staged publish, and
   * bucketed co-located joins (no shuffle between same-bucketed tables).
@@ -16,7 +17,7 @@ class SinksSpec extends SparkSpec {
       (2, Some(2), "Event", null, Seq[String](), Seq[String](), Seq[String](), Seq[String]()),
       (3, None, "Topical", "Bad", Seq[String](), Seq[String](), Seq[String](), Seq[String]()))
       .toDF("_id", "fast", "type", "prefLabel", "altLabel", "sameAsLc", "sameAsViaf", "normalized")
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val out = scratchDir("graft_sink").toString
     val report = Sinks.writeFast(docs, s"$out/fast")
     assert(report.rows === 2) // P5 guard dropped the null-fast row
     assert(report.badRows === 1)
@@ -28,7 +29,7 @@ class SinksSpec extends SparkSpec {
 
   test("publish: a failed rename rolls back the tables already published") {
     import java.nio.file.{Files, Path}
-    val out = Files.createTempDirectory("graft_publish").resolve("out")
+    val out = scratchDir("graft_publish").resolve("out")
     val staging = out.resolve("_staging-test")
     def put(dir: Path, text: String): Unit = {
       Files.createDirectories(dir)
@@ -55,7 +56,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("mergeInto: upsert + delete, untouched buckets byte-identical, replay-idempotent") {
-    val path = java.nio.file.Files.createTempDirectory("graft_merge").toString + "/t"
+    val path = scratchDir("graft_merge").toString + "/t"
     def table() = Sinks.readMerged(spark, path)
       .orderBy("k").as[(Long, String)].collect().toSeq
     def bucketFiles(): Map[String, Array[Byte]] = {
@@ -109,7 +110,7 @@ class SinksSpec extends SparkSpec {
   test("mergeInto: each bucket of a new version is one file, whatever the input partitioning") {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
-    val path = Files.createTempDirectory("graft_merge_files").toString + "/t"
+    val path = scratchDir("graft_merge_files").toString + "/t"
     def ls(p: Path): Seq[Path] = scala.util.Using.resource(Files.list(p))(_.iterator().asScala.toList)
     def versions(): Set[Path] = ls(Paths.get(path, "data")).toSet
     // data files in each `_bucket=<b>` directory of one version
@@ -134,7 +135,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("mergeInto: a fully-emptied bucket does not resurrect deleted keys") {
-    val path = java.nio.file.Files.createTempDirectory("graft_merge_empty").toString + "/t"
+    val path = scratchDir("graft_merge_empty").toString + "/t"
     def bucketOf(k: Long): Int = spark.range(1)
       .select(pmod(xxhash64(lit(k)), lit(8L)).cast("int")).head.getInt(0)
     val keys = (1L to 64L)
@@ -172,7 +173,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("mergeInto: crash-injected commits never expose a half-merged table") {
-    val path = java.nio.file.Files.createTempDirectory("graft_merge_crash")
+    val path = scratchDir("graft_merge_crash")
       .toString + "/t"
     def table() = Sinks.readMerged(spark, path)
       .orderBy("k").as[(Long, String)].collect().toSeq
@@ -219,7 +220,7 @@ class SinksSpec extends SparkSpec {
   test("mergeInto refuses to shadow an existing non-manifest table") {
     // a pre-manifest (or foreign) directory with data must fail LOUDLY —
     // treating it as "new" would replace the table with just this batch
-    val path = java.nio.file.Files.createTempDirectory("graft_merge_foreign")
+    val path = scratchDir("graft_merge_foreign")
       .toString + "/t"
     Seq((1L, "old")).toDF("k", "v").withColumn("_bucket", lit(0))
       .write.partitionBy("_bucket").parquet(path)
@@ -230,7 +231,7 @@ class SinksSpec extends SparkSpec {
     assert(e.getMessage.contains("refusing to shadow"), e.getMessage)
     // a crashed FIRST commit (data/ + manifest temp, nothing referenced)
     // is legitimately new — the merge proceeds and sweeps the leftovers
-    val path2 = java.nio.file.Files.createTempDirectory("graft_merge_crash0")
+    val path2 = scratchDir("graft_merge_crash0")
       .toString + "/t"
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(path2, "data", "v-dead"))
@@ -252,7 +253,7 @@ class SinksSpec extends SparkSpec {
     // r15 (ADVICE r14): an OS-level crash can make the rename visible with
     // lost page-cache bytes — the regex scan used to parse the remains to
     // a PARTIAL bucket map and readMerged silently dropped buckets.
-    val path = java.nio.file.Files.createTempDirectory("graft_trunc").toString + "/t"
+    val path = scratchDir("graft_trunc").toString + "/t"
     val base = (1L to 200L).map(k => (k, s"v$k")).toDF("k", "v")
     Sinks.mergeInto(spark, path, base, "k", numBuckets = 16)
     assert(Sinks.readMerged(spark, path).count() === 200)
@@ -284,7 +285,7 @@ class SinksSpec extends SparkSpec {
     // used to be rejected with the same 'truncated or corrupt' message
     // as a crash artifact — a misleading diagnosis for a version skew
     // whose fix is a rewrite, not forensics
-    val path = java.nio.file.Files.createTempDirectory("graft_legacy").toString + "/t"
+    val path = scratchDir("graft_legacy").toString + "/t"
     val base = (1L to 20L).map(k => (k, s"v$k")).toDF("k", "v")
     Sinks.mergeInto(spark, path, base, "k", numBuckets = 4)
     val manifest = new java.io.File(path).listFiles()

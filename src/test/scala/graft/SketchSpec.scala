@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ops.Sketch
+import graft.queries.QueryHelpers.scratchDir
 
 /** Accuracy contracts for the approximate sketches: estimates must land
   * within their documented error bounds of the exact answer (the driver's
@@ -60,7 +61,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("hll profile survives a parquet round-trip: sketch once, roll up later") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll_profile").toString
+    val dir = scratchDir("graft_hll_profile").toString
     Sketch.hllProfile(data, "v", lgK = 12, "g").write.mode("overwrite").parquet(dir)
     // a later session reads the stored profile and answers a rollup
     // without touching the base data

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import graft.queries.QueryHelpers.scratchDir
 import graft.streaming.StreamingIngest
 
 /** End-to-end streaming ingest over a real watched directory: files arrive
@@ -13,9 +14,9 @@ import graft.streaming.StreamingIngest
 class StreamingIngestSpec extends SparkSpec {
 
   test("directory stream → foreachBatch merge → persisted fast table") {
-    val in = Files.createTempDirectory("graft_stream_in").toString
-    val table = Files.createTempDirectory("graft_stream_tbl").toString + "/fast"
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
+    val in = scratchDir("graft_stream_in").toString
+    val table = scratchDir("graft_stream_tbl").toString + "/fast"
+    val ckpt = scratchDir("graft_stream_ckpt").toString
 
     Files.writeString(java.nio.file.Paths.get(s"$in/a.nt"),
       "<http://id.worldcat.org/fast/1> <http://www.w3.org/2004/02/skos/core#prefLabel> \"First Doc\" .\n" +
@@ -49,7 +50,7 @@ class StreamingIngestSpec extends SparkSpec {
   test("late richer contributor wins type regardless of arrival order") {
     import spark.implicits._
     import graft.model.FastDoc
-    val table = java.nio.file.Files.createTempDirectory("graft_merge_tbl").toString + "/fast"
+    val table = scratchDir("graft_merge_tbl").toString + "/fast"
     // rich(A)=4+7+10=21, rich(C)=5+10=15; stored merged arrays after batch 2
     // would total 4+7+20=31 — rich(B)=12+10=22 beats both ORIGINALS but not
     // the inflated merged doc
@@ -78,7 +79,7 @@ class StreamingIngestSpec extends SparkSpec {
     import spark.implicits._
     import graft.model.FastDoc
     import graft.ingest.MergeFastDocs.{finishBuf, mergeBuf, toBuf}
-    val table = Files.createTempDirectory("graft_bmp_tbl").toString + "/fast"
+    val table = scratchDir("graft_bmp_tbl").toString + "/fast"
     // code points: 3+7=10 vs 5+7=12; UTF-16 units: 6+7=13 vs 12
     val a = FastDoc(1, 1, "Topical", "\uD835\uDC9C\uD835\uDC9C\uD835\uDC9C", Nil, Nil, Nil, Nil)
     val b = FastDoc(1, 1, "Topical", "BBBBB", Nil, Nil, Nil, Nil)
@@ -105,7 +106,7 @@ class StreamingIngestSpec extends SparkSpec {
       FastDoc(3, 3, "Event", null, Seq("c"), Nil, Nil, Nil))
 
     def ingest(batches: Seq[Seq[FastDoc]]): Seq[String] = {
-      val table = Files.createTempDirectory("graft_order_tbl").toString + "/fast"
+      val table = scratchDir("graft_order_tbl").toString + "/fast"
       batches.foreach(b =>
         StreamingIngest.mergeBatch(spark, spark.createDataset(b).toDF(), table))
       spark.read.parquet(table).collect().map(_.toString).sorted.toSeq
@@ -125,7 +126,7 @@ class StreamingIngestSpec extends SparkSpec {
   test("micro-batch merge leaves untouched partitions byte-identical") {
     import spark.implicits._
     import graft.model.FastDoc
-    val table = Files.createTempDirectory("graft_prune_tbl").toString + "/fast"
+    val table = scratchDir("graft_prune_tbl").toString + "/fast"
 
     def md5s(root: String): Map[String, String] = {
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -191,7 +192,7 @@ class StreamingIngestSpec extends SparkSpec {
   test("merge writes one file per touched bucket at any partition count") {
     import spark.implicits._
     import graft.model.FastDoc
-    val table = Files.createTempDirectory("graft_files_tbl").toString + "/fast"
+    val table = scratchDir("graft_files_tbl").toString + "/fast"
     def filesPerBucket(): Map[String, Int] = {
       val dirs = Files.list(java.nio.file.Paths.get(table))
       try dirs.iterator().asScala.filter(_.getFileName.toString.startsWith("_bucket="))

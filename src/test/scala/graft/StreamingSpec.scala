@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.queries.QueryHelpers.scratchDir
 import graft.streaming.EventStream
 import graft.streaming.EventStream.{Event, UserRunningStats}
 
@@ -329,7 +330,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     import graft.ops.Dedup
     import graft.streaming.StreamingDedup
-    val root = Files.createTempDirectory("graft_sdedup").toString
+    val root = scratchDir("graft_sdedup").toString
     val (inDir, sigPath, outPath, ckpt) =
       (s"$root/in", s"$root/sig", s"$root/dups", s"$root/ckpt")
     Files.createDirectories(Paths.get(inDir))

@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.queries.QueryHelpers.scratchDir
+
 /** Pins the `Tables.load` invariant that broke round 6: `events.ts` must
   * arrive as INT64 epoch NANOS (LongType) no matter which physical
   * timestamp type the fixture generator happened to write. The driver
@@ -19,7 +21,7 @@ class TablesSpec extends SparkSpec {
   private val micros = 1614834367891011L
 
   private def roundTrip(write: String => Unit): Long = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tables").toString
+    val dir = scratchDir("graft_tables").toString
     write(s"$dir/events.parquet")
     val back = Tables.load(spark, dir, "events")
     assert(back.schema("ts").dataType === LongType, "ts must load as epoch-nanos BIGINT")
@@ -54,7 +56,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("embeddings: ARRAY<DOUBLE> parquet loads as ARRAY<FLOAT>") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tables").toString
+    val dir = scratchDir("graft_tables").toString
     Seq((1L, Seq(0.25d, -1.5d))).toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val back = Tables.load(spark, dir, "embeddings")

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.queries.QueryHelpers.scratchDir
 import graft.sources.TextTables
 
 /** Round-trip fidelity of the schema'd JSONL/CSV source-sinks on the
@@ -21,7 +22,7 @@ class TextTablesSpec extends SparkSpec {
   private def df = rows.toDF("id", "text", "lang")
 
   test("jsonl round-trips nulls, empties, quotes, unicode, newlines") {
-    val path = Files.createTempDirectory("graft_jsonl_spec").toString
+    val path = scratchDir("graft_jsonl_spec").toString
     TextTables.writeJsonl(df, path)
     val back = TextTables.readJsonl(spark, df.schema, path)
       .collect().map(r => (r.getLong(0), Option(r.getString(1)), Option(r.getString(2))))
@@ -32,7 +33,7 @@ class TextTablesSpec extends SparkSpec {
   }
 
   test("jsonl read fails fast on a malformed line") {
-    val path = Files.createTempDirectory("graft_jsonl_bad")
+    val path = scratchDir("graft_jsonl_bad")
     Files.writeString(path.resolve("part-0.json"),
       """{"id": 1, "text": "ok", "lang": "en"}""" + "\n" + """{"id": 2, "text": """ + "\n")
     val err = intercept[Exception] {
@@ -44,7 +45,7 @@ class TextTablesSpec extends SparkSpec {
 
   test("csv round-trips with null/empty distinction (no embedded newlines)") {
     val flat = rows.filterNot(_._2.exists(_.contains("\n")))
-    val path = Files.createTempDirectory("graft_csv_spec").toString
+    val path = scratchDir("graft_csv_spec").toString
     TextTables.writeCsv(flat.toDF("id", "text", "lang"), path)
     val back = TextTables.readCsv(spark, df.schema, path)
       .collect().map(r => (r.getLong(0), Option(r.getString(1)), Option(r.getString(2))))
@@ -54,7 +55,7 @@ class TextTablesSpec extends SparkSpec {
 
   test("fixed-width: alignment, all-blank nulls, short lines, numeric cast") {
     import graft.sources.TextTables.FixedCol
-    val path = Files.createTempDirectory("graft_fw_spec")
+    val path = scratchDir("graft_fw_spec")
     def line(id: String, name: String, amt: String) =
       id.padTo(6, ' ') + name.padTo(12, ' ') + amt.reverse.padTo(4, ' ').reverse
     Files.writeString(path.resolve("d.txt"),
@@ -75,7 +76,7 @@ class TextTablesSpec extends SparkSpec {
 
   test("xml round-trips markup chars, nulls, unicode, newlines") {
     val xmlRows = rows :+ (6L, Some("<tag> & \"entities\" 'quoted'"), Some("en"))
-    val path = Files.createTempDirectory("graft_xml_spec").toString
+    val path = scratchDir("graft_xml_spec").toString
     TextTables.writeXml(xmlRows.toDF("id", "text", "lang"), path)
     val back = TextTables.readXml(spark, df.schema, path)
       .collect().map(r => (r.getLong(0), Option(r.getString(1)), Option(r.getString(2))))

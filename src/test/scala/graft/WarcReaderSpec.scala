@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.QueryHelpers.scratchDir
 import graft.sources.WarcReader
 import graft.sources.WarcReader.{WarcBad, WarcRec, WriteRec}
 
@@ -131,7 +132,7 @@ class WarcReaderSpec extends SparkSpec {
   }
 
   test("Spark surface: binaryFile scan over shard files + quarantine channel") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_spec_")
+    val dir = scratchDir("graft_warc_spec_")
     java.nio.file.Files.write(dir.resolve("a.warc.gz"),
       WarcReader.writeShardGz(Seq(warcinfoRec,
         WriteRec("response", "http://x/doc/1", "", 200, "t/p",
@@ -153,7 +154,7 @@ class WarcReaderSpec extends SparkSpec {
   }
 
   test("streaming surface: shards arriving later become new micro-batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_stream_")
+    val dir = scratchDir("graft_warc_stream_")
     def shard(name: String, uri: String, body: String): Unit =
       java.nio.file.Files.write(dir.resolve(name),
         WarcReader.writeShardGz(Seq(WriteRec("response", uri, "", 200, "t/p",

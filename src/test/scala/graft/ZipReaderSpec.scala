@@ -3,6 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import graft.queries.QueryHelpers.scratchDir
 import graft.sources.ZipReader
 
 /** ZIP text source: multi-entry, multi-archive, directory entries, CRLF,
@@ -24,7 +25,7 @@ class ZipReaderSpec extends SparkSpec {
   }
 
   test("lines of every entry of every archive, in entry order") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zipspec")
+    val dir = scratchDir("graft_zipspec")
     writeZip(dir, "a.zip", Seq(
       "one.nt" -> "l1\nl2\n",          // trailing newline: no phantom line
       "sub/" -> "",                     // directory entry: skipped
@@ -47,7 +48,7 @@ class ZipReaderSpec extends SparkSpec {
       "<http://id.worldcat.org/fast/1> <http://www.w3.org/2004/02/skos/core#prefLabel> \"A\" .",
       "<http://id.worldcat.org/fast/2> <http://schema.org/sameAs> <http://viaf.org/viaf/14> .",
       "junk line")
-    val dir = java.nio.file.Files.createTempDirectory("graft_zipnt")
+    val dir = scratchDir("graft_zipnt")
     writeZip(dir, "corpus.zip",
       Seq("s0.nt" -> lines.take(2).mkString("", "\n", "\n"),
         "s1.nt" -> (lines(2) + "\n")))
