@@ -2,9 +2,13 @@ package graft.ingest
 
 import java.io.IOException
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table sinks (K1/K2/K4 in SURVEY.md §2.1) plus the reference's progress
   * counters (A3) as `observe()` metrics.
@@ -203,10 +207,9 @@ object Sinks {
     val stored = {
       val touched = prevMap.view.filterKeys(touchedBuckets.contains).toSeq
       touched.groupBy(_._2).map { case (ver, entries) =>
-        spark.read
-          .option("basePath", new org.apache.hadoop.fs.Path(root, ver).toString)
-          .parquet(entries.map { case (b, _) =>
-            new org.apache.hadoop.fs.Path(root, s"$ver/_bucket=$b").toString }: _*)
+        val base = new Path(root, ver)
+        readBuckets(spark, base,
+          entries.map { case (b, _) => new Path(base, s"_bucket=$b") }, upserts.schema)
       }.reduceOption(_ unionByName _)
     }
     val merged = stored match {
@@ -243,6 +246,47 @@ object Sinks {
       sweep(fs, root, nextN, nextMap)
     } finally m.release()
   }
+
+  /** Read the bucket directories `dirs` of a `_bucket`-partitioned
+    * parquet table rooted at `base`, as rows of `schema` (which holds the
+    * `_bucket` column). The files are listed here, on the driver, one
+    * `listStatus` per directory, and handed to the file index through its
+    * status cache, so Spark runs no listing job (it lists more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths with
+    * one) and, with the schema given, no job that reads a footer to infer
+    * it. Names Spark's own listing skips ([[hidden]]) are skipped; a
+    * missing directory or a nested one throws.
+    */
+  def readBuckets(spark: SparkSession, base: Path, dirs: Seq[Path],
+                  schema: StructType): DataFrame = {
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val roots = dirs.map(fs.makeQualified)
+    val listed: Map[Path, Array[FileStatus]] = roots.map { d =>
+      val files = fs.listStatus(d).filterNot(st => hidden(st.getPath.getName))
+      files.find(_.isDirectory).foreach(st =>
+        throw new IOException(s"readBuckets: unexpected directory ${st.getPath}"))
+      d -> files
+    }.toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = listed.get(path)
+      def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, roots,
+      Map("basePath" -> fs.makeQualified(base).toString), Some(schema), cache)
+    val (part, data) = schema.partition(_.name == "_bucket")
+    // nullable, as a schema read from the files would be: a column a file
+    // lacks reads as null
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, StructType(part),
+      StructType(data.map(_.copy(nullable = true))), None, new ParquetFileFormat,
+      Map.empty)(spark))
+  }
+
+  /** The names Spark's file listing skips: `_`-prefixed ones that are not
+    * `name=value` partition directories, and `.`-prefixed ones.
+    */
+  private[graft] def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
 
   private val ManifestRe = "_manifest-([0-9]+)\\.json".r
   private val ManifestTmpRe = "_manifest-[0-9]+\\.json\\.tmp-.*".r

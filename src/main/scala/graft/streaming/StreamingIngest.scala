@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
-import graft.ingest.FastIngest
+import graft.ingest.{FastIngest, Sinks}
+import graft.ops.Iterate
 
 /** Streaming variant of the ingest job: watch a directory for NT files,
   * parse/project incrementally, and merge each micro-batch into the
@@ -14,24 +16,20 @@ import graft.ingest.FastIngest
   * The table is stored hash-bucketed on `_id` (`_bucket` partition
   * column): the bucket is a pure function of the merge key, so a doc
   * never moves between partitions, and a micro-batch therefore touches
-  * only the buckets its `_id`s hash into. The merge reads just those
-  * partitions (semi-join on the bucket key — dynamic partition pruning
-  * keeps the scan partition-bounded) and writes them back under
-  * `partitionOverwriteMode=dynamic`, leaving every untouched partition's
-  * files byte-identical. Rows read, shuffled and written per batch are
-  * O(batch + touched partitions), not O(table).
+  * only the buckets its `_id`s hash into. The prune is static: the batch
+  * docs are materialized once, and that pass brings the touched buckets
+  * to the driver; the driver lists the table root and each touched bucket
+  * directory, and the merge reads exactly those files
+  * ([[graft.ingest.Sinks.readBuckets]]), with no listing job and no
+  * footer read. It writes them back under `partitionOverwriteMode=dynamic`,
+  * leaving every untouched partition's files byte-identical. Rows read,
+  * shuffled and written per batch are O(batch + touched partitions), not
+  * O(table), and so is the listing, bar one listing of the root.
   *
   * The merge is bucket-aligned: its one shuffle is keyed on `_bucket`
   * with an explicit partition count, so AQE does not coalesce it into a
   * single task, and each task merges, materializes and writes whole
-  * buckets, one file per bucket, on all cores at once. Two per-batch
-  * costs remain: `spark.read.parquet(tablePath)` lists every bucket
-  * directory, and with 64 buckets, above
-  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32), each
-  * [[mergeBatch]] launches a 64-task listing job (384-436 ms of a
-  * 1.8-3.0 s batch of 100 docs merged into an 8,000-doc table, 4 cores);
-  * and the batch's docs are evaluated twice, once for the touched-bucket
-  * broadcast and once for the union.
+  * buckets, one file per bucket, on all cores at once.
   *
   * The per-id aggregation runs inside the batch; cross-batch duplicates
   * are resolved by the same deterministic merge the batch job uses, so
@@ -40,11 +38,13 @@ import graft.ingest.FastIngest
 object StreamingIngest {
 
   /** Bucket count for the stored table layout. At deploy scale pick
-    * ~table_size / target_partition_size; the rewrite cost scales with
-    * touched buckets, so more buckets = finer-grained rewrites, while the
-    * per-batch directory listing scales with all of them.
+    * ~table_size / target_partition_size; the rewrite cost and the
+    * per-batch directory listing both scale with the touched buckets, so
+    * more buckets = finer-grained rewrites.
     */
   val DefaultBuckets = 64
+
+  private val BucketDir = "_bucket=([0-9]+)".r
 
   /** Merge a batch of enriched docs into the stored fast table.
     *
@@ -55,36 +55,59 @@ object StreamingIngest {
     * [[graft.ingest.MergeFastDocs]] Aggregator. Recomputing richness from
     * the stored *merged* doc would inflate early winners via their unioned
     * arrays and make the outcome arrival-order dependent.
+    *
+    * A `tablePath` that exists but holds anything besides `_bucket=<n>`
+    * directories and hidden files is some other table: the merge throws
+    * rather than write buckets into it.
     */
   def mergeBatch(spark: SparkSession, docs: DataFrame, tablePath: String): Unit = {
     val bucket = pmod(xxhash64(col("_id")), lit(DefaultBuckets.toLong)).cast("int")
-    val incoming = docs.select(col("*"),
+    // the batch docs are evaluated once: this pass feeds the union below
+    // and brings the touched buckets to the driver (at most
+    // DefaultBuckets values, a layout constant)
+    val touchedObs = Observation()
+    val in = Iterate.materialize(docs.select(col("*"),
         richnessLen.as("_bestRich"), col("type").as("_bestType"),
         col("prefLabel").as("_bestPref"), col("prefLabel").as("_fillPref"))
       .withColumn("_bucket", bucket)
-    // existence probe, not a catch-around-the-read: catching the
-    // PATH_NOT_FOUND AnalysisException (a) masked genuinely corrupt
-    // tables as "new" and (b) left a failed query execution on the async
-    // ExecutionListenerBus, which logged an ERROR per pre-first-commit
-    // micro-batch — noise that would page an on-call. A read error on an
-    // EXISTING path now propagates loudly.
-    val existing = {
-      val p = new org.apache.hadoop.fs.Path(tablePath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) Some(spark.read.parquet(tablePath)) else None
-    }
-    val unioned = existing match {
-      case Some(prev) =>
-        // only the stored partitions this batch's ids hash into
-        // participate in the merge — the semi-join on the partition
-        // column lets dynamic partition pruning skip the rest of the scan
-        // (the files are pruned; the listing above still covers every
-        // bucket). `incoming` is evaluated here and again in the union.
-        val touched = incoming.select("_bucket").distinct()
-        prev.join(broadcast(touched), Seq("_bucket"), "left_semi")
-          .unionByName(incoming)
-      case None => incoming
-    }
+      .observe(touchedObs, collect_set(col("_bucket")).as("bs")))
+    try {
+      val touched = touchedObs.get("bs").asInstanceOf[scala.collection.Seq[Any]]
+        .map(_.asInstanceOf[Int]).toSet
+      // an existence probe and a driver listing, not a catch around a
+      // read: a read error on an EXISTING bucket propagates loudly
+      val root = new Path(tablePath)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val entries = if (fs.exists(root)) fs.listStatus(root).toSeq else Nil
+      val (buckets, rest) = entries.partition(st =>
+        st.isDirectory && BucketDir.matches(st.getPath.getName))
+      val foreign = rest.map(_.getPath.getName).filterNot(Sinks.hidden)
+      require(foreign.isEmpty,
+        s"mergeBatch: $tablePath holds ${foreign.mkString(", ")} besides " +
+          "_bucket=<n> directories — refusing to merge into a foreign table")
+      val storedDirs = buckets.map(_.getPath)
+        .filter(p => touched(p.getName.stripPrefix("_bucket=").toInt))
+      val unioned =
+        if (storedDirs.isEmpty) in.df
+        else Sinks.readBuckets(spark, root, storedDirs, in.df.schema).unionByName(in.df)
+      // overwrite must not read from its own output mid-write → materialize
+      // fully first (reliable checkpoint when a dir is set, else cache).
+      // The materialized frame keeps the shuffle's partitions, so each write
+      // task holds whole buckets and writes one file per bucket.
+      // Dynamic overwrite replaces ONLY the partitions present in the
+      // written data (= the touched buckets); untouched partitions' files
+      // are left as-is, byte for byte.
+      val m = Iterate.materialize(fold(spark, unioned))
+      try m.df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_bucket")
+        .parquet(tablePath)
+      finally m.release()
+    } finally in.release()
+  }
+
+  /** The per-id fold of stored and incoming rows, one row per `_id`. */
+  private def fold(spark: SparkSession, unioned: DataFrame): DataFrame = {
     // same total order as MergeFastDocs.keyOrd: (richness, type, prefLabel)
     // of the best original, nulls low
     val ord = struct(col("_bestRich"),
@@ -97,7 +120,7 @@ object StreamingIngest {
     // writes whole buckets. The shuffle carries the union's rows, not
     // partial aggregation buffers.
     val tasks = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, DefaultBuckets)
-    val merged = unioned
+    unioned
       .repartition(tasks, col("_bucket"))
       .groupBy("_bucket", "_id")
       .agg(
@@ -116,19 +139,6 @@ object StreamingIngest {
         col("_best._bestType").as("_bestType"),
         col("_best._bestPref").as("_bestPref"),
         col("_fillPref"), col("_bucket"))
-    // overwrite must not read from its own output mid-write → materialize
-    // fully first (reliable checkpoint when a dir is set, else cache).
-    // The materialized frame keeps the shuffle's partitions, so each write
-    // task holds whole buckets and writes one file per bucket.
-    // Dynamic overwrite replaces ONLY the partitions present in the
-    // written data (= the touched buckets); untouched partitions' files
-    // are left as-is, byte for byte.
-    val m = graft.ops.Iterate.materialize(merged)
-    m.df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_bucket")
-      .parquet(tablePath)
-    m.release()
   }
 
   /** Scalar richness of an ORIGINAL doc, mirroring

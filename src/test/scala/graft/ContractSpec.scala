@@ -174,6 +174,20 @@ class ContractSpec extends AnyFunSuite with SparkSpec {
     assert(offenders.isEmpty, s"endgame logic outside LocalEndgame: ${offenders.mkString("; ")}")
   }
 
+  // mergeBatch reads its stored side only through Sinks.readBuckets, over
+  // the touched bucket directories it listed itself: a session read of the
+  // table path would bring back the whole-table listing job.
+  test("StreamingIngest reads the stored table only through Sinks.readBuckets") {
+    import java.nio.file.{Files, Paths}
+    val p = Paths.get("src/main/scala/graft/streaming/StreamingIngest.scala")
+    assert(Files.isRegularFile(p), s"no source at ${p.toAbsolutePath}")
+    val src = Files.readString(p)
+    val reads = """\.read\b""".r.findAllMatchIn(src)
+      .map(m => s"line ${src.take(m.start).count(_ == '\n') + 1}").toSeq
+    assert(reads.isEmpty, s"session reads in StreamingIngest.scala: ${reads.mkString(", ")}")
+    assert(src.contains("Sinks.readBuckets("), "StreamingIngest no longer reads through readBuckets")
+  }
+
   // A query's or a spec's temp directory outlives the run unless something
   // deletes it: every one goes through QueryHelpers.scratchDir, which does
   // at JVM exit.

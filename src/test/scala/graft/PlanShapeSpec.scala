@@ -132,14 +132,14 @@ class PlanShapeSpec extends SparkSpec {
 
   test("mergeBatch: one shuffle on the bucket, none after the aggregate, pruned stored scan") {
     import spark.implicits._
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, DynamicPruningExpression, Literal}
+    import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan, UnionExec}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
       AdaptiveSparkPlanHelper, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
-    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     import org.apache.spark.sql.util.QueryExecutionListener
     import graft.ingest.FastIngest
     import graft.streaming.StreamingIngest
@@ -152,6 +152,9 @@ class PlanShapeSpec extends SparkSpec {
       lit("Topical"))
     val table = scratchDir("graft_merge_plan").toString + "/fast"
     StreamingIngest.mergeBatch(spark, docs(1 to 400), table)
+    val stream = java.nio.file.Files.list(java.nio.file.Paths.get(table))
+    val bucketsBefore = try stream.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("_bucket=")).toSet finally stream.close()
 
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
     val listener = new QueryExecutionListener {
@@ -162,14 +165,21 @@ class PlanShapeSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       StreamingIngest.mergeBatch(spark, docs(350 to 450), table)
-      // listener events arrive on an asynchronous bus
+      // listener events arrive on an asynchronous bus. The first
+      // materialize is the batch docs; the merge's is the one that scans
+      // the stored table.
+      object walk extends AdaptiveSparkPlanHelper
+      def storedScans(p: SparkPlan): Seq[FileSourceScanExec] = walk.collect(p) {
+        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains(table)) => s
+      }
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       def materialized = seen.asScala.collectFirst {
-        case (f, qe) if f == "localCheckpoint" || f == "checkpoint" => qe.executedPlan
+        case (f, qe) if (f == "localCheckpoint" || f == "checkpoint") &&
+          storedScans(qe.executedPlan).nonEmpty => qe.executedPlan
       }
       while (materialized.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      val plan = materialized.getOrElse(fail(s"no materialize seen: ${seen.asScala.map(_._1)}"))
-      object walk extends AdaptiveSparkPlanHelper
+      val plan = materialized.getOrElse(
+        fail(s"no materialize scans the stored table: ${seen.asScala.map(_._1)}"))
       val text = plan.toString
 
       // the nodes from the materialized root down to the first `stop`
@@ -194,15 +204,19 @@ class PlanShapeSpec extends SparkSpec {
       assert(!down(plan, _.isInstanceOf[BaseAggregateExec]).exists(_.isInstanceOf[Exchange]),
         s"exchange between the aggregate and the materialize:\n$text")
 
-      val stored = walk.collect(plan) {
-        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains(table)) => s
-      }
+      // the prune is static: the scan's roots are exactly the stored
+      // directories of the buckets the batch's ids hash into
+      val touched = docs(350 to 450)
+        .select(pmod(xxhash64(col("_id")), lit(StreamingIngest.DefaultBuckets.toLong)))
+        .distinct().as[Long].collect().map(b => s"_bucket=$b").toSet
+      val bucketDirs = touched.intersect(bucketsBefore).map(d => s"$table/$d")
+      assert(bucketDirs.size > 1, s"fixture touches stored buckets $bucketDirs")
+      val stored = storedScans(plan)
       assert(stored.nonEmpty, s"no scan of the stored table:\n$text")
-      assert(stored.forall(_.partitionFilters.exists {
-        case DynamicPruningExpression(Literal.TrueLiteral) => false
-        case _: DynamicPruningExpression => true
-        case _ => false
-      }), s"stored table scan is not dynamically pruned:\n$text")
+      stored.foreach { s =>
+        assert(s.relation.location.rootPaths.map(_.toUri.getPath).toSet === bucketDirs,
+          s"stored scan roots are not the touched buckets:\n$text")
+      }
     } finally spark.listenerManager.unregister(listener)
   }
 

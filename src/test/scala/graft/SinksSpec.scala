@@ -134,6 +134,27 @@ class SinksSpec extends SparkSpec {
     assert(Sinks.readMerged(spark, path).count() === 400)
   }
 
+  // The stored side is read from a driver listing of the touched buckets,
+  // with the batch's schema, as in StreamingIngest.mergeBatch: Spark lists
+  // more than 32 paths with a job of its own, and infers a schema with a
+  // footer job.
+  test("mergeInto runs no listing job when a batch touches most buckets of a version") {
+    val path = scratchDir("graft_merge_jobs").toString + "/t"
+    Sinks.mergeInto(spark, path, (1L to 2000L).map(k => (k, s"v$k")).toDF("k", "v"),
+      "k", numBuckets = 64)
+    val batch = (1990L to 2100L).map(k => (k, s"w$k")).toDF("k", "v")
+    val touched = batch.select(pmod(xxhash64(col("k")), lit(64L))).distinct().count()
+    assert(touched > 32, s"fixture touches only $touched buckets")
+    val jobs = jobsOf(Sinks.mergeInto(spark, path, batch, "k", numBuckets = 64))
+    assert(!jobs.exists(_.startsWith("Listing leaf files")), jobs.mkString("\n"))
+    // the touched-bucket pass, the key broadcast, the shuffle and the
+    // checkpoint of the merge, and the write: no footer job
+    assert(jobs.size <= 5, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    val back = Sinks.readMerged(spark, path)
+    assert(back.count() === 2100L)
+    assert(back.where(col("k") === 1995L).select("v").as[String].head() === "w1995")
+  }
+
   test("mergeInto: a fully-emptied bucket does not resurrect deleted keys") {
     val path = scratchDir("graft_merge_empty").toString + "/t"
     def bucketOf(k: Long): Int = spark.range(1)

@@ -13,6 +13,25 @@ import graft.streaming.StreamingIngest
   */
 class StreamingIngestSpec extends SparkSpec {
 
+  /** MD5 of every data file under `root`, by relative path (hidden
+    * `_`/`.` names skipped).
+    */
+  private def md5s(root: String): Map[String, String] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val base = java.nio.file.Paths.get(root)
+    val stream = Files.walk(base)
+    try {
+      val out = scala.collection.mutable.Map.empty[String, String]
+      stream.forEach { p =>
+        val name = p.getFileName.toString
+        if (Files.isRegularFile(p) && !name.startsWith(".") && !name.startsWith("_"))
+          out(base.relativize(p).toString) =
+            md.digest(Files.readAllBytes(p)).map("%02x".format(_)).mkString
+      }
+      out.toMap
+    } finally stream.close()
+  }
+
   test("directory stream → foreachBatch merge → persisted fast table") {
     val in = scratchDir("graft_stream_in").toString
     val table = scratchDir("graft_stream_tbl").toString + "/fast"
@@ -128,22 +147,6 @@ class StreamingIngestSpec extends SparkSpec {
     import graft.model.FastDoc
     val table = scratchDir("graft_prune_tbl").toString + "/fast"
 
-    def md5s(root: String): Map[String, String] = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val base = java.nio.file.Paths.get(root)
-      val stream = Files.walk(base)
-      try {
-        val out = scala.collection.mutable.Map.empty[String, String]
-        stream.forEach { p =>
-          val name = p.getFileName.toString
-          if (Files.isRegularFile(p) && !name.startsWith(".") && !name.startsWith("_"))
-            out(base.relativize(p).toString) =
-              md.digest(Files.readAllBytes(p)).map("%02x".format(_)).mkString
-        }
-        out.toMap
-      } finally stream.close()
-    }
-
     // wave 1: 200 ids spread across many buckets
     val wave1 = (1 to 200).map(i => FastDoc(i, i, "Topical", s"Doc $i", Nil, Nil, Nil, Nil))
     StreamingIngest.mergeBatch(spark, spark.createDataset(wave1).toDF(), table)
@@ -224,5 +227,64 @@ class StreamingIngestSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  // The stored side is read from a driver listing of the touched buckets
+  // only: Spark lists more than 32 paths with a job, and reading with an
+  // inferred schema costs a footer job. One merge of pipeline-built docs
+  // into a 64-bucket table: the batch docs (a shuffle and a checkpoint),
+  // the merge (a shuffle and a checkpoint) and the write.
+  test("mergeBatch runs no listing or schema-inference job") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    import graft.ingest.FastIngest
+    import graft.model.FastDoc
+    val table = scratchDir("graft_jobs_tbl").toString + "/fast"
+    StreamingIngest.mergeBatch(spark, spark.createDataset((1 to 2000).map(i =>
+      FastDoc(i, i, "Topical", s"Doc $i", Nil, Nil, Nil, Nil))).toDF(), table)
+    val docs = FastIngest.buildDocs(FastIngest.project(FastIngest.parse(
+      (1990 to 2100).map(i => s"<http://id.worldcat.org/fast/$i> " +
+        s"<http://www.w3.org/2004/02/skos/core#prefLabel> \"New $i\" .").toDF("line"))),
+      lit("Topical"))
+    val touched = docs.select(pmod(xxhash64(col("_id")), lit(64L))).distinct().count()
+    assert(touched > 32, s"fixture touches only $touched buckets")
+    val jobs = jobsOf(StreamingIngest.mergeBatch(spark, docs, table))
+    assert(!jobs.exists(_.startsWith("Listing leaf files")), jobs.mkString("\n"))
+    assert(jobs.size <= 5, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    val back = spark.read.parquet(table)
+    assert(back.count() === 2100L)
+    assert(back.where(col("_id") === 1995).select("prefLabel").as[String].head() === "New 1995")
+  }
+
+  // A path that exists but is not a `_bucket=<n>` table is some other
+  // table: the merge fails and leaves it as it was.
+  test("mergeBatch refuses a path that holds a table of another layout") {
+    import spark.implicits._
+    import graft.model.FastDoc
+    val batch = spark.createDataset(Seq(FastDoc(1, 1, "Topical", "One", Nil, Nil, Nil, Nil))).toDF()
+    val plain = scratchDir("graft_plain_tbl").toString + "/fast"
+    spark.range(10).toDF("_id").write.parquet(plain)
+    val before = md5s(plain)
+    val e = intercept[IllegalArgumentException](StreamingIngest.mergeBatch(spark, batch, plain))
+    assert(e.getMessage.contains("part-"), e.getMessage)
+    assert(md5s(plain) === before)
+    // a bucketed table with one stray data file beside its buckets
+    val stray = scratchDir("graft_stray_tbl").toString + "/fast"
+    StreamingIngest.mergeBatch(spark, batch, stray)
+    Files.writeString(java.nio.file.Paths.get(stray, "notes.txt"), "x")
+    intercept[IllegalArgumentException](StreamingIngest.mergeBatch(spark, batch, stray))
+  }
+
+  test("an empty batch leaves every bucket file byte-identical") {
+    import spark.implicits._
+    import graft.model.FastDoc
+    val table = scratchDir("graft_empty_tbl").toString + "/fast"
+    StreamingIngest.mergeBatch(spark, spark.createDataset((1 to 200).map(i =>
+      FastDoc(i, i, "Topical", s"Doc $i", Nil, Nil, Nil, Nil))).toDF(), table)
+    val before = md5s(table)
+    assert(before.size > 10, s"expected many bucket files, got ${before.keySet}")
+    StreamingIngest.mergeBatch(spark, spark.createDataset(Seq.empty[FastDoc]).toDF(), table)
+    assert(md5s(table) === before)
+    assert(spark.read.parquet(table).count() === 200L)
   }
 }
